@@ -4,11 +4,12 @@ BASELINE.json:6 — the reference has no text processing at all).
 Four families, each with a distinct scale profile:
 
 - exact          : hash group-by; one shuffle on the dedup key.
-- n-gram Jaccard : exact set similarity via inverted-index self-join —
-                   correct but O(sum of postings²) on hot shingles.
+- n-gram Jaccard : exact set similarity (and containment) via the
+                   prefix-filtered join of operators/setjoin.py —
+                   O(Σ prefix-postings²) on hot shingles.
 - MinHash + LSH  : sub-quadratic near-dup at 100 TB: signatures (one
                    shuffle), banding (hash-bucket join), exact verify only
-                   on candidates.
+                   on candidates (setjoin.verify).
 - SimHash        : 64-bit fingerprints, hamming-band candidate join.
 
 All JVM-side (built-in functions only — no Python UDFs in any hot path).
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_open_source_spark.operators.caching import owned_persist
+from etl_open_source_spark.operators.setjoin import candidate_pairs, verify, with_prefix
 
 # ---------------------------------------------------------------- exact
 
@@ -70,9 +72,9 @@ def word_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -
     """Per-doc DISTINCT shingle sets as (id, shingles: array<long>) — the
     scan-local (zero-exchange) form of ``word_shingles``: sizes become
     ``size(shingles)``, exact intersections become ``array_intersect``.
-    Consumers that never need a doc-frequency cap (MinHash verify,
-    uncapped Jaccard) should prefer this and skip the explode + groupBy
-    round-trip entirely (r12). CAUTION: explode this frame only AFTER a
+    Every set-join consumer builds on this (via ``_doc_sets``, capped or
+    not) and skips the explode + groupBy round-trip entirely (r12).
+    CAUTION: explode this frame only AFTER a
     persist()/materialization — explode directly over the lazy projection
     lets predicate pushdown rewrite the optimizer's inferred
     size(...)>0 generate-filter in terms of the raw text column, where
@@ -159,50 +161,32 @@ def word_shingles(
     return out
 
 
-def _jaccard_on_pairs(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """Exact Jaccard for given candidate (id_a, id_b) pairs."""
-    sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
-    sa = shingles.select(F.col("id").alias("id_a"), F.col("shingle"))
-    sb = shingles.select(F.col("id").alias("id_b"), F.col("shingle"))
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnsRenamed({"id": "id_a", "n": "n_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "n": "n_b"}), "id_b")
-        .withColumn(
-            "jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-        )
-        .select("id_a", "id_b", "jaccard")
-    )
-
-
 # ------------------------------------------------- exact n-gram Jaccard
 
 
-def _capped_doc_arrays(
-    df: DataFrame, id_col: str, text_col: str, n: int, max_doc_freq: int
+def _doc_sets(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_doc_freq: int | None
 ) -> DataFrame:
-    """Per-doc sorted shingle arrays with the doc-frequency cap applied
-    ARRAY-SIDE (r13): persist the scan-local per-doc arrays (one row per
-    doc), build the over-cap hot list by exploding OFF that cache (the
-    explode-behind-a-persist shape — the O(doc²) inlining trap cannot
-    fire through an InMemoryRelation), fold it to a single broadcast row,
-    and subtract per doc with array_except. The old shape persisted the
-    exploded (doc, shingle) index and re-grouped it with a
-    collect_list(shingle) — a full exchange of every posting row — to get
-    the same arrays; the cache now holds one row per doc and the re-group
-    exchange is gone. Docs that lose every shingle keep an empty array
-    (no prefix, no candidates) — exactly as absent docs behaved.
+    """Per-doc sorted distinct shingle arrays ``(id, arr)`` — the SETS
+    input of :mod:`operators.setjoin`.
+
+    Uncapped, they are scan-local: no explode, no groupBy. With
+    ``max_doc_freq`` the cap is applied ARRAY-SIDE (r13): persist the
+    per-doc arrays (one row per doc), build the over-cap hot list by
+    exploding OFF that cache (the explode-behind-a-persist shape — the
+    O(doc²) inlining trap cannot fire through an InMemoryRelation), fold it
+    to a single broadcast row, and subtract per doc with array_except. No
+    exchange of every posting row, as a collect_list re-group of the
+    exploded index would pay. Docs that lose every shingle keep an empty
+    array (no prefix, no candidates).
 
     The hot list is corpus_size/cap rows by construction (that is what
     makes them hot), so the single collected array stays model-sized at
-    any corpus scale — the same bound the old broadcast anti-join relied
-    on."""
-    arrays = owned_persist(word_shingle_arrays(df, id_col, text_col, n))
+    any corpus scale."""
+    arrays = word_shingle_arrays(df, id_col, text_col, n)
+    if max_doc_freq is None:
+        return arrays.select("id", F.sort_array("shingles").alias("arr"))
+    arrays = owned_persist(arrays)
     hot = (
         arrays.select(F.explode("shingles").alias("shingle"))
         .groupBy("shingle")
@@ -215,6 +199,16 @@ def _capped_doc_arrays(
     )
 
 
+def _verified_jaccard(pairs: DataFrame, docs: DataFrame, threshold: float) -> DataFrame:
+    """Exact Jaccard of candidate pairs over the doc sets, kept if >= threshold."""
+    return (
+        verify(pairs, docs)
+        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -223,89 +217,26 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
-    """All pairs with word-n-gram Jaccard >= threshold, computed exactly
-    from the inverted index (shingle → sorted posting list). The exact
-    baseline the probabilistic methods are judged against.
+    """All pairs with word-n-gram Jaccard >= threshold, computed exactly —
+    the baseline the probabilistic methods are judged against.
 
-    Plan (r12): PREFIX-FILTERED inverted-index self-join (AllPairs/PPJoin,
-    Bayardo et al. / Xiao et al.) — exact, with far fewer candidate pairs
-    than the plain posting self-join:
-
-    1. Per-doc shingle ARRAYS, sorted by the 64-bit hash value (any global
-       total order satisfies the prefix lemma; the hash order is free —
-       no doc-frequency join needed).
-    2. Prefix lemma: J(a,b) >= t implies |a∩b| >= t·max(|a|,|b|), so the
-       SMALLEST shared token (in the global order) must sit within the
-       first |x| - ⌈t·|x|⌉ + 1 tokens of BOTH docs (if it didn't for x,
-       every shared token would be among x's last ⌈t·|x|⌉ - 1 tokens and
-       |a∩b| < t·|x| — contradiction). So indexing only each doc's prefix
-       and equi-joining prefixes yields a candidate SUPERSET of all
-       qualifying pairs.
-    3. Exact verify per candidate: join the two doc arrays back and count
-       |a∩b| with array_intersect — no per-pair count aggregation, no
-       shuffle of the full pair multiset.
+    Plan: the symmetric prefix-filter join of :mod:`operators.setjoin`
+    over the per-doc shingle sets. J(a,b) >= t implies |a∩b| >=
+    t·max(|a|,|b|), so the prefix fraction is t for BOTH docs and the
+    candidates come from prefix ⋈ prefix; each candidate is then verified
+    exactly with array_intersect.
 
     [Measured at sf0.1 (5000 docs, 260k shingle rows over 27k distinct
-    shingles): the plain self-join emitted 1.27M pair rows into a 1.13M-
-    group count aggregate (map-side agg compressed ~nothing) — 1.7 s of
-    the query; the prefix join emits 430k candidate rows / 409k distinct
-    pairs and the array verify replaces the pair shuffle: warm-cache
-    1.37 s → 1.01 s, identical 256 output pairs. The candidate reduction
-    is also the published 100 TB story for exact all-pairs similarity —
-    the quadratic term shrinks by the prefix-fraction² on every posting.
-    Earlier measured notes still hold: the cap rides the broadcast
-    anti-join; the pre-cap explode persists via word_shingles so the
-    corpus is scanned once, not once per consumer.]
+    shingles): the plain posting self-join emitted 1.27M pair rows into a
+    1.13M-group count aggregate; the prefix join emits 430k candidate rows
+    / 409k distinct pairs and the array verify replaces the pair shuffle:
+    warm-cache 1.37 s → 1.01 s, identical 256 output pairs (r12).]
 
-    ``max_doc_freq`` bounds every posting list via the upstream broadcast
-    anti-join; without a cap the candidate join is O(Σ prefix-postings²)
-    by design (verification baseline only)."""
-    if max_doc_freq is None:
-        # no cap → the doc sets are computable SCAN-LOCALLY: no explode, no
-        # groupBy — the only exchanges left are the candidate join's own
-        docs_base = word_shingle_arrays(df, id_col, text_col, n).select(
-            "id", F.sort_array("shingles").alias("arr")
-        )
-    else:
-        docs_base = _capped_doc_arrays(df, id_col, text_col, n, max_doc_freq)
-    # ceil(t·n) must never round UP past the exact value (that would
-    # SHORTEN the prefix and could drop a boundary pair): subtract an
-    # epsilon so an FP product like 3.0000000000000004 still ceils to 3;
-    # a true non-integer product keeps its ceil (or lengthens the prefix
-    # by one — a superset, still exact). The epsilon is SIZE-RELATIVE
-    # (1e-9 + n·1e-15): t·n's FP error is ~n·2⁻⁵³, so a constant epsilon
-    # alone could under-guard docs beyond ~10⁷ shingles (ADVICE r12).
-    docs = (
-        docs_base
-        .select(
-            "id",
-            "arr",
-            F.size("arr").alias("n"),
-            F.expr(
-                f"slice(arr, 1, size(arr) - CAST(CEIL({threshold} * size(arr)"
-                f" - 1e-9 - size(arr) * 1e-15) AS INT) + 1)"
-            ).alias("prefix"),
-        )
-    )
-    docs = owned_persist(docs)
-    pref = docs.select("id", F.explode("prefix").alias("shingle"))
-    cand = (
-        pref.select(F.col("id").alias("id_a"), "shingle")
-        .join(pref.select(F.col("id").alias("id_b"), "shingle"), "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    da = docs.select(F.col("id").alias("id_a"), F.col("arr").alias("__arr_a"), F.col("n").alias("n_a"))
-    db = docs.select(F.col("id").alias("id_b"), F.col("arr").alias("__arr_b"), F.col("n").alias("n_b"))
-    return (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("__arr_a", "__arr_b")))
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    ``max_doc_freq`` bounds every posting list (see :func:`_doc_sets`);
+    without a cap the candidate join is O(Σ prefix-postings²) by design
+    (verification baseline only)."""
+    docs = with_prefix(_doc_sets(df, id_col, text_col, n, max_doc_freq), threshold)
+    return _verified_jaccard(candidate_pairs(docs, symmetric=True), docs, threshold)
 
 
 # ---------------------------------------------------------- MinHash+LSH
@@ -388,42 +319,17 @@ def minhash_lsh_pairs(
     identical docs collapse to one representative and never form such
     buckets. Pairs discoverable ONLY through an over-cap bucket are
     missed by design."""
-    if max_doc_freq is not None:
-        # capped variant (tests/robustness): the doc-frequency drop needs
-        # the exploded view for its global count, so this path keeps the
-        # persisted inverted index and the posting-join verify
-        sh = word_shingles(df, id_col, text_col, n, max_doc_freq, persist=True)
-        sig = minhash_signatures(sh, num_hashes)
-        candidates = lsh_candidate_pairs(sig, num_hashes, bands, max_bucket_size)
-        return _jaccard_on_pairs(candidates, sh).filter(F.col("jaccard") >= threshold)
-    # Production path (r12): persist per-doc shingle ARRAYS (scan-local to
-    # build — no explode, no groupBy), derive the exploded view for the
-    # signature aggregate by a scan-local explode off the cache, and verify
-    # candidates with array_intersect on the two doc arrays. Removes two
-    # full exchanges vs the old exploded pipeline (the sizes groupBy(id)
-    # and the per-pair intersection count groupBy) and shrinks the cache
-    # from one row per (doc, shingle) to one row per doc. Jaccard values
-    # identical: |a∩b| over distinct sets either way.
-    docs = owned_persist(word_shingle_arrays(df, id_col, text_col, n))
-    sh = docs.select("id", F.explode("shingles").alias("shingle"))
+    # Persist per-doc shingle ARRAYS (scan-local to build — no explode, no
+    # groupBy), derive the exploded view for the signature aggregate by a
+    # scan-local explode off the cache, and verify candidates on the two
+    # doc arrays (r12): no sizes groupBy(id), no per-pair intersection
+    # count groupBy, and one cached row per doc. The capped variant takes
+    # the same path with the cap applied array-side (see _doc_sets).
+    docs = owned_persist(_doc_sets(df, id_col, text_col, n, max_doc_freq))
+    sh = docs.select("id", F.explode("arr").alias("shingle"))
     sig = minhash_signatures(sh, num_hashes)
     candidates = lsh_candidate_pairs(sig, num_hashes, bands, max_bucket_size)
-    da = docs.select(
-        F.col("id").alias("id_a"), F.col("shingles").alias("__arr_a"),
-        F.size("shingles").alias("n_a"),
-    )
-    db = docs.select(
-        F.col("id").alias("id_b"), F.col("shingles").alias("__arr_b"),
-        F.size("shingles").alias("n_b"),
-    )
-    return (
-        candidates.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("__arr_a", "__arr_b")))
-        .withColumn("jaccard", F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verified_jaccard(candidates, docs, threshold)
 
 
 def lsh_candidate_pairs(
@@ -786,73 +692,18 @@ def ngram_containment_pairs(
     |src|/|dst| ≈ 0, so resemblance dedup never sees it; containment is
     the quote/boilerplate/subset detector (Broder's original distinction).
 
-    Plan (r13): ASYMMETRIC prefix filter — the one-sided variant of the
-    Jaccard path's AllPairs/PPJoin (Bayardo et al.; Xiao et al.):
+    Plan: the ASYMMETRIC prefix-filter join of :mod:`operators.setjoin`.
+    A directed pair with C(src→dst) ≥ t has |a∩b| ≥ t·n_src ≥
+    t·min(n_a, n_b), so only the SMALLER doc gets a prefix bound (a tiny
+    doc can be contained in any suffix of a huge one): candidates come
+    from smaller-prefix ⋈ larger-full. The one exact intersection per
+    unordered pair is divided by each side's own size to emit both
+    directed rows.
 
-    1. Per-doc sorted shingle arrays (scan-local when uncapped; one
-       groupBy off the persisted capped index otherwise), exactly as in
-       :func:`ngram_jaccard_pairs`.
-    2. Lemma: a directed pair with C(src→dst) ≥ t has |a∩b| ≥ t·n_src ≥
-       t·min(n_a, n_b), so the SMALLER doc x (ties broken by id) must
-       share a token within its first n_x − ⌈t·n_x⌉ + 1 tokens — but the
-       larger doc gets NO prefix bound from containment (a tiny doc can
-       be contained in any suffix of a huge one). Hence the candidate
-       join is smaller-doc PREFIX ⋈ larger-doc FULL list — strictly
-       fewer candidate rows than the old full ⋈ full posting self-join,
-       and no per-pair count aggregate at all.
-    3. Exact verify per candidate with ``array_intersect`` on the two doc
-       arrays; both directed rows divide the one intersection by their
-       own source size.
-
-    The ⌈t·n⌉ epsilon is size-relative (1e-9 + n·1e-15): the FP error of
-    t·n is ~n·2⁻⁵³, so an absolute epsilon alone could shorten a prefix
-    for docs beyond ~10⁷ shingles (ADVICE r12) — the guard may only ever
-    LENGTHEN a prefix (superset stays exact).
-
-    ``max_doc_freq`` bounds every posting list via the upstream broadcast
-    anti-join exactly as in the Jaccard path."""
-    if max_doc_freq is None:
-        docs_base = word_shingle_arrays(df, id_col, text_col, n).select(
-            "id", F.sort_array("shingles").alias("arr")
-        )
-    else:
-        docs_base = _capped_doc_arrays(df, id_col, text_col, n, max_doc_freq)
-    docs = docs_base.select(
-        "id",
-        "arr",
-        F.size("arr").alias("n"),
-        F.expr(
-            f"slice(arr, 1, size(arr) - CAST(CEIL({threshold} * size(arr)"
-            f" - 1e-9 - size(arr) * 1e-15) AS INT) + 1)"
-        ).alias("prefix"),
-    )
-    docs = owned_persist(docs)
-    pref = docs.select("id", "n", F.explode("prefix").alias("shingle"))
-    full = docs.select("id", "n", F.explode("arr").alias("shingle"))
-    cand = (
-        pref.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"), "shingle")
-        .join(
-            full.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"), "shingle"),
-            "shingle",
-        )
-        .filter(
-            (F.col("n_a") < F.col("n_b"))
-            | ((F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b")))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    da = docs.select(
-        F.col("id").alias("id_a"), F.col("arr").alias("__arr_a"), F.col("n").alias("n_a")
-    )
-    db = docs.select(
-        F.col("id").alias("id_b"), F.col("arr").alias("__arr_b"), F.col("n").alias("n_b")
-    )
-    inter = (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .withColumn("inter", F.size(F.array_intersect("__arr_a", "__arr_b")))
-    )
+    ``max_doc_freq`` bounds every posting list exactly as in the Jaccard
+    path."""
+    docs = with_prefix(_doc_sets(df, id_col, text_col, n, max_doc_freq), threshold)
+    inter = verify(candidate_pairs(docs, symmetric=False), docs)
     directed = inter.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "inter",
         F.col("n_a").alias("n"),

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_open_source_spark.operators.caching import owned_persist
+from etl_open_source_spark.operators.setjoin import candidate_pairs, verify, with_prefix
 
 SCALE = 1_000_000_000
 
@@ -177,10 +178,12 @@ def link_prediction_jaccard(
     """Neighbor-set Jaccard link prediction: for every non-adjacent node
     pair at distance 2, score = |N(u) ∩ N(v)| / |N(u) ∪ N(v)|.
 
-    Input: undirected edges as canonical ``(src < dst)`` rows. Candidate
-    pairs generate from the common-neighbor join (adjacency self-joined on
-    the shared neighbor), so only distance-2 pairs are ever materialized —
-    never the |V|² cross product. ``max_degree`` is the hub guard: a node
+    Input contract: a simple undirected graph as canonical ``(src < dst)``
+    rows. Neighborhoods are SETS: a repeated edge counts once, in the
+    degree as in the common count. Candidate pairs generate from the
+    common-neighbor join (adjacency self-joined on the shared neighbor),
+    so only distance-2 pairs are ever materialized — never the |V|² cross
+    product. ``max_degree`` is the hub guard: a node
     adjacent to k others contributes O(k²) candidate pairs through the
     common-neighbor join, so hubs above the cap are excluded as *pivots*
     (they still count inside each endpoint's degree and in the existing-
@@ -188,97 +191,56 @@ def link_prediction_jaccard(
     hot-bucket cap (operators/dedup.py) and the basket guard
     (operators/baskets.py).
 
-    Plan (r13): prefix-filtered set-similarity join over per-node
-    neighbor ARRAYS — the AllPairs/PPJoin machinery the n-gram dedup
-    family uses (operators/dedup.py), specialized to the graph measure:
+    Plan: the ASYMMETRIC prefix-filter join of :mod:`operators.setjoin`
+    over per-node neighbor sets:
 
-    1. ONE aggregate per node computes BOTH the full degree and the
-       sorted capped-pivot neighbor array (hubs arrive as a broadcast
-       left join and are skipped by collect_list's NULL drop — the old
-       shape paid a separate degree aggregate, a pair-count aggregate
-       over the full common-neighbor join, and two degree join-backs).
+    1. ONE aggregate per node computes BOTH the degree and the sorted
+       capped-pivot neighbor set (hubs arrive as a broadcast left join and
+       are skipped by collect_set's NULL drop).
     2. Prefix lemma, graph form: jaccard ≥ t means
        common ≥ t·(deg_a + deg_b − common), so common ≥
        (t/(1+t))·(deg_a+deg_b) ≥ (2t/(1+t))·n_small where n is the
-       capped-array size (deg ≥ n always). The SMALLER side (ties by id)
-       must therefore share a pivot within its first
-       n − ⌈(2t/(1+t))·n⌉ + 1 sorted elements — candidates come from
-       smaller-prefix ⋈ larger-full, a strict subset of the old full
-       common-neighbor self-join's rows.
+       capped-set size (deg ≥ n always): smaller-prefix ⋈ larger-full.
+       The score is filtered ROUNDED to 6 places, which admits a raw
+       score down to t − 5e-7, so the fraction is cut for that t_eff.
     3. Exact verify per candidate with ``array_intersect`` on the two
-       capped arrays (common counts capped pivots only, exactly as the
-       pivot-filtered count aggregate did); degrees ride along on the
-       same join — no extra join-backs.
-
-    Shuffles: adjacency aggregate (one), prefix candidate join (pivot
-    key), candidate distinct, two array join-backs, existing-edge
-    anti-join — the pair-count HashAggregate and both degree joins are
-    gone from the plan."""
+       capped sets (common counts capped pivots only); degrees ride along
+       on the same join-back."""
     adj = edges.selectExpr("src AS v", "dst AS nbr").unionAll(
         edges.selectExpr("dst AS v", "src AS nbr")
     )
-    deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("deg"))
     marked = adj.withColumn("__pivot_nbr", F.col("nbr"))
     if max_degree is not None:
         # Broadcast the HUB list and left-join a marker: hubs above the
         # cap are few by definition (that is what makes them hubs), so
         # the broadcast stays model-sized at any graph scale. A hub
         # neighbor still counts toward the node's DEGREE; it just never
-        # enters the pivot array.
-        hubs = deg.filter(F.col("deg") > max_degree).select(
-            F.col("v").alias("nbr"), F.lit(True).alias("__hub")
+        # enters the pivot set.
+        hubs = (
+            adj.groupBy("v")
+            .agg(F.size(F.collect_set("nbr")).alias("deg"))
+            .filter(F.col("deg") > max_degree)
+            .select(F.col("v").alias("nbr"), F.lit(True).alias("__hub"))
         )
         marked = adj.join(F.broadcast(hubs), "nbr", "left").withColumn(
             "__pivot_nbr", F.when(F.col("__hub").isNull(), F.col("nbr"))
         )
-    # one exchange: degree AND sorted capped-pivot array per node
-    # (collect_list drops the NULLed hub neighbors)
-    nodes = marked.groupBy("v").agg(
-        F.count(F.lit(1)).alias("deg"),
-        F.sort_array(F.collect_list("__pivot_nbr")).alias("arr"),
+    # one exchange: degree AND sorted capped-pivot set per node; sets, so
+    # a repeated edge counts once
+    nodes = marked.groupBy(F.col("v").alias("id")).agg(
+        F.size(F.collect_set("nbr")).alias("deg"),
+        F.sort_array(F.collect_set("__pivot_nbr")).alias("arr"),
     )
-    # prefix fraction 2t/(1+t); size-relative epsilon so FP error can only
-    # LENGTHEN a prefix (superset stays exact — see dedup.py)
-    frac = 2.0 * threshold / (1.0 + threshold)
-    nodes = owned_persist(
-        nodes.select(
-            "v",
-            "deg",
-            "arr",
-            F.size("arr").alias("n"),
-            F.expr(
-                f"slice(arr, 1, size(arr) - CAST(CEIL({frac} * size(arr)"
-                f" - 1e-9 - size(arr) * 1e-15) AS INT) + 1)"
-            ).alias("prefix"),
-        )
-    )
-    pref = nodes.select("v", "n", F.explode("prefix").alias("nbr"))
-    full = nodes.select("v", "n", F.explode("arr").alias("nbr"))
-    cand = (
-        pref.select(F.col("v").alias("id_a"), F.col("n").alias("n_a"), "nbr")
-        .join(full.select(F.col("v").alias("id_b"), F.col("n").alias("n_b"), "nbr"), "nbr")
-        .filter(
-            (F.col("n_a") < F.col("n_b"))
-            | ((F.col("n_a") == F.col("n_b")) & (F.col("id_a") < F.col("id_b")))
-        )
-        .select(F.least("id_a", "id_b").alias("id_a"), F.greatest("id_a", "id_b").alias("id_b"))
-        .distinct()
-    )
-    non_edges = cand.join(
+    t_eff = max(threshold - 5e-7, 0.0)
+    nodes = with_prefix(nodes, 2.0 * t_eff / (1.0 + t_eff))
+    non_edges = candidate_pairs(nodes, symmetric=False).join(
         edges.selectExpr("src AS id_a", "dst AS id_b"),
         ["id_a", "id_b"],
         "left_anti",
     )
-    na = nodes.select(
-        F.col("v").alias("id_a"), F.col("arr").alias("__arr_a"), F.col("deg").alias("deg_a")
-    )
-    nb = nodes.select(
-        F.col("v").alias("id_b"), F.col("arr").alias("__arr_b"), F.col("deg").alias("deg_b")
-    )
     scored = (
-        non_edges.join(na, "id_a")
-        .join(nb, "id_b")
-        .withColumn("common", F.size(F.array_intersect("__arr_a", "__arr_b")))
+        verify(non_edges, nodes, "deg")
+        .withColumnRenamed("inter", "common")
         .filter(F.col("common") >= 1)
         .select(
             "id_a",

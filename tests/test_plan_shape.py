@@ -99,6 +99,27 @@ def _n_exchanges(plan: str) -> int:
     )
 
 
+@pytest.mark.parametrize(
+    "name, exchanges, persists",
+    [
+        ("q_dedup_ngram", 7, 6),
+        ("q_dedup_near", 5, 3),
+        ("q_dedup_containment", 12, 10),
+        ("q_graph_link_jaccard", 18, 4),
+    ],
+)
+def test_set_join_plan_shape_pinned(spark, sf_dir, name, exchanges, persists):
+    """The prefix-filter set-join queries (operators/setjoin.py) keep the
+    Exchange count and the cached-relation scans they had when each
+    operator carried its own copy of the join."""
+    plan = _formatted_plan(spark, sf_dir, name)
+    assert _n_exchanges(plan) == exchanges, plan
+    n_cached = sum(
+        1 for l in plan.splitlines() if l.strip().startswith("(") and "InMemoryTableScan" in l
+    )
+    assert n_cached == persists, plan
+
+
 def test_doc_chunk_is_scan_local(spark, sf_dir):
     """Chunking must be a pure map stage: generator explode over the scan,
     no shuffle anywhere — that's what lets 100 TB chunk at scan speed."""
