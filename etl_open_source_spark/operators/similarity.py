@@ -212,6 +212,20 @@ def _vec_matrix_groups(vec_arr):
     return groups, norms
 
 
+def _mapside_keep(sims, valid, K: int, slack: float):
+    """The map-side top-k prune mask over a (corpus × query) sim matrix:
+    per query, every row within ``slack`` of the K-th best raw sim. Invalid
+    (NULL) sims get the worst key, so fewer than K valid rows keep them
+    whole. Spark ranks NaN above +inf under ``sim DESC``, so a NaN sim gets
+    the best key: it is always kept and counts toward the K best."""
+    import numpy as np
+
+    key = np.where(valid, -sims, np.inf)
+    key[np.isnan(key)] = -np.inf
+    thr = np.partition(key, K - 1, axis=0)[K - 1, :]
+    return key <= (thr[None, :] + slack)
+
+
 def _prunable_id_type(dt) -> bool:
     """Id types where Arrow value_counts equality provably matches Spark
     `=` semantics (integers, strings): the map-side top-k prune's
@@ -405,9 +419,7 @@ def _brute_force_scores(
                     mult = int(mx) if mx is not None else 0
                 K = keep_top + mult + kept_ids.null_count
                 if nc > K:
-                    key = np.where(valid, -sims, np.inf)
-                    thr = np.partition(key, K - 1, axis=0)[K - 1, :]
-                    keep = key <= (thr[None, :] + keep_slack)
+                    keep = _mapside_keep(sims, valid, K, keep_slack)
                     rows_i, cols_i = np.nonzero(keep)
                     yield pa.RecordBatch.from_arrays(
                         [

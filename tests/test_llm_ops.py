@@ -1105,6 +1105,60 @@ def test_brute_force_mapside_topk_prune(spark):
     assert len(got_f) == 6 and all(r.query_id != r.neighbor_id for r in got_f)
 
 
+def test_mapside_keep_ranks_nan_first():
+    """Spark ranks a NaN sim above every number under ``sim DESC``, so the
+    map-side prune must keep a NaN row and count it toward the K best. A
+    plain ``key <= thr + slack`` test drops it (NaN compares false), and
+    np.partition sorts NaN last, so K or more NaN rows in a column made the
+    threshold itself NaN and pruned the whole column."""
+    import numpy as np
+
+    nan = np.nan
+    sims = np.array([
+        [0.9, nan],
+        [nan, nan],
+        [0.5, nan],
+        [0.1, 0.3],
+        [0.2, 0.0],
+    ])
+    valid = np.ones_like(sims, dtype=bool)
+    valid[4, 1] = False  # a NULL sim: worst key
+    keep = S._mapside_keep(sims, valid, 2, 0.0)
+    assert keep[:, 0].tolist() == [True, True, False, False, False]
+    assert keep[:, 1].tolist() == [True, True, True, False, False]
+
+
+def test_brute_force_topk_extreme_norms_prune_matches_unpruned(spark):
+    """Vectors at both ends of the double range: norms near sqrt(MAX) and
+    near sqrt(MIN_SUBNORMAL). A usable norm is the sqrt of a finite sum of
+    squares, so it is at most fl(sqrt(MAX)), whose square is finite, and at
+    least sqrt(MIN_SUBNORMAL), whose square is positive: qn·cn never
+    overflows or underflows and the kernel never scores NaN. The pruned
+    ranking (long ids) must equal the unpruned one (double ids turn the
+    prune off), with one corpus batch larger than k + id multiplicity."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    big, tiny = 1.3e154, 3e-162
+    rows = [(0, [big, 0.0])]
+    for i in range(1, 25):
+        a = i * 0.06
+        scale = big if i % 3 else tiny
+        rows.append((i, [scale * math.cos(a), scale * math.sin(a)]))
+    rows.append((25, [math.sqrt(1.7976931348623157e308), 0.0]))
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    float_ids = corpus.withColumn("vec_id", F.col("vec_id").cast("double"))
+
+    def ranking(df, qid):
+        got = S.brute_force_topk(df.filter(F.col("vec_id") == qid), df, k=4).collect()
+        return sorted((r.rank, int(r.neighbor_id), r.sim) for r in got)
+
+    pruned = ranking(corpus, 0)
+    assert pruned == ranking(float_ids, 0.0)
+    assert len(pruned) == 4 and all(not math.isnan(sim) for _, _, sim in pruned)
+
+
 def test_operator_cache_ownership_release(spark, sf_dir):
     """r13 (VERDICT r12 item 6): operator-internal persist() calls whose
     consumers are lazy register in the caching module, and
