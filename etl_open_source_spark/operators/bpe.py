@@ -68,8 +68,9 @@ def bpe_train(
     freq)]. Ties broken deterministically by (freq desc, left, right).
     Stops early when no pair reaches ``min_freq``.
 
-    The histogram is checkpointed per round (same iterative-lineage rule
-    as connected_components); each round's shuffle is vocabulary-sized."""
+    The histogram is checkpointed per round (the same lineage truncation
+    as dedup.connected_components' star rounds); each round's shuffle is
+    vocabulary-sized."""
     vocab = (
         word_histogram(df, text_col)
         .select(F.expr("transform(split(word, ''), c -> c)").alias("symbols"), "cnt")

@@ -375,145 +375,17 @@ def lsh_candidate_pairs(
 # ------------------------------------------------- cluster formation
 
 
-def _checkpoint_partitioned(df: DataFrame) -> DataFrame:
-    """localCheckpoint that PRESERVES the physical output partitioning.
-
-    Under AQE the checkpoint's LogicalRDD records the AdaptiveSparkPlan's
-    partitioning as Unknown (measured r13: a hash(dst)-repartitioned,
-    checkpointed edge list still re-exchanged BOTH sides of every CC
-    round's join — 2 exchanges/round; with the checkpoint planned under
-    AQE-off the leaf keeps hashpartitioning and the round join plans with
-    1, or 0 when both sides are pre-partitioned). Only the checkpoint's
-    own materialization is planned non-adaptively; every round still
-    plans with AQE. The conf flip is restored in a finally."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
-def _label_checksum(labels: DataFrame):
-    """Σ rep as decimal — the CC convergence metric — with the numeric-id
-    contract ENFORCED: an id whose decimal cast yields NULL silently
-    vanishes from the sum (ANSI off), and an all-NULL sum would compare
-    None == None and declare convergence after round 1, returning partial
-    components (ADVICE r12). One aggregate computes the row count, the
-    castable count and the sum; any uncastable id raises instead."""
-    # try_cast, not cast: ANSI mode (Spark 4 default) hard-errors the cast
-    # mid-aggregate with an opaque CAST_INVALID_INPUT; with ANSI off the
-    # plain cast silently NULLs. try_cast yields NULL in BOTH modes, and
-    # the count comparison turns it into this typed, actionable error.
-    row = labels.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.expr("try_cast(rep AS decimal(38,0))")).alias("n_num"),
-        F.sum(F.expr("try_cast(rep AS decimal(38,0))")).alias("s"),
-    ).collect()[0]
-    if row["n"] != row["n_num"]:
-        raise TypeError(
-            "connected_components: node ids must cast cleanly to decimal "
-            f"for the label-sum convergence check ({row['n'] - row['n_num']} "
-            "of them cast to NULL) — use numeric ids, or hash string ids "
-            "to BIGINT (xxhash64) before clustering"
-        )
-    return row["s"]
-
-
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 50
-) -> DataFrame:
-    """Group near-dup pairs (id_a, id_b) into clusters: returns (id, rep)
-    where ``rep`` is the smallest id in the node's connected component —
-    the canonical representative for keep-one dedup.
-
-    Algorithm: iterative min-label propagation. Every node starts labeled
-    with itself; each round every node takes the min label over itself and
-    its neighbors; stop when no label changes. Converges in O(component
-    diameter) rounds — near-dup components are overwhelmingly small/dense
-    (dup clusters, not long chains), so this is 2-4 rounds in practice.
-    Each round is one shuffle (join) + one groupBy; intermediate label
-    sets are persisted and the loop's convergence check reuses the next
-    round's aggregation (no extra pass). The driver only ever sees a
-    one-row count — nothing is collected.
-
-    At 100 TB-scale graphs with adversarially long chains, use
-    ``connected_components_star`` below (O(log n) rounds regardless of
-    diameter). Raises if the graph hasn't converged in
-    ``max_iterations`` — a silently-partial labeling must never escape."""
-    # undirected edge list, both directions; eagerly materialized ONCE —
-    # the pair pipeline feeding this is typically expensive (LSH / n-gram
-    # self-join) and must not re-execute inside the iteration.
-    # repartition("dst") BEFORE the checkpoint (r13): every round joins
-    # edges ⋈ labels on dst, and a checkpoint preserves its physical
-    # partitioning — hash(dst) up front means the big (edge) side is
-    # never re-exchanged inside the loop; only the per-round label set
-    # shuffles. One extra exchange at build time buys one fewer exchange
-    # PER ROUND at any scale.
-    e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = _checkpoint_partitioned(
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("dst")
-    )
-    # localCheckpoint (not persist): truncates lineage so round N's plan
-    # doesn't nest rounds 1..N-1 (Catalyst re-analysis goes superlinear
-    # on nested iterative plans)
-    # labels keep their hash(id) partitioning through the checkpoint too:
-    # renamed to dst for the round join, the join then needs NO exchange
-    # on either side; only the union+groupBy shuffle remains per round
-    labels = _checkpoint_partitioned(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("rep", F.col("id"))
-    )
-    converged = False
-    # Convergence = the label-sum going stable: min-propagation can only
-    # DECREASE a node's label (the min is over a set that includes its own
-    # previous rep) and the id universe is fixed, so Σ rep strictly
-    # decreases iff at least one label changed. One cheap partial-agg scan
-    # of the just-checkpointed labels replaces the old per-round
-    # join+filter+count (a full extra shuffle of both label sets per
-    # round). Decimal sum: ids are arbitrary 64-bit values, a long sum
-    # could overflow under ANSI.
-    prev_sum = _label_checksum(labels)
-    for _ in range(max_iterations):
-        # every node pulls its neighbors' current labels, keeps the min of
-        # (own label, neighbor labels)
-        neighbor_labels = (
-            edges.join(labels.withColumnRenamed("id", "dst"), "dst")
-            .select(F.col("src").alias("id"), "rep")
-        )
-        new_labels = _checkpoint_partitioned(
-            labels.unionByName(neighbor_labels)
-            .groupBy("id")
-            .agg(F.min("rep").alias("rep"))
-        )
-        cur_sum = _label_checksum(new_labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"connected_components: no convergence in {max_iterations} rounds "
-            "(component diameter exceeds the cap) — use "
-            "connected_components_star for long-chain graphs"
-        )
-    return labels
-
-
 def _undirected_canon(pairs: DataFrame) -> DataFrame:
-    """(id_a, id_b) → canonical (hi, lo) with hi > lo, self-loops dropped."""
-    return (
-        pairs.select(
-            F.greatest("id_a", "id_b").alias("hi"),
-            F.least("id_a", "id_b").alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-    )
+    """(id_a, id_b) → canonical (hi, lo) with hi >= lo, duplicates dropped.
+    Self-pairs stay as (x, x) so a node seen only in a self-pair still
+    gets a row; a pair with a NULL end becomes (NULL, NULL) — greatest and
+    least skip NULLs, so without the guard it would turn into a silent
+    self-pair of its other end."""
+    both = F.col("id_a").isNotNull() & F.col("id_b").isNotNull()
+    return pairs.select(
+        F.when(both, F.greatest("id_a", "id_b")).alias("hi"),
+        F.when(both, F.least("id_a", "id_b")).alias("lo"),
+    ).distinct()
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -544,41 +416,68 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return p1.unionByName(p2).distinct()
 
 
-def connected_components_star(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    converges in O(log n) rounds INDEPENDENT of component diameter, so a
-    10^6-node chain costs ~20 rounds where label propagation needs 10^6.
-    Same output contract as ``connected_components``: (id, rep) with rep
-    = the component's minimum id. Convergence detected by an edge-set
-    checksum (count + hash-sum) going stable — one tiny agg per round."""
-    # localCheckpoint each round: persist() alone leaves the logical plan
-    # nested round-over-round and Catalyst re-analysis goes superlinear
-    # after ~8 iterations (the classic iterative-DataFrame pitfall);
-    # checkpointing truncates lineage to the materialized result.
-    E = _undirected_canon(pairs).localCheckpoint(eager=True)
-    prev_chk = None
-    converged = False
+def connected_components(pairs: DataFrame, max_rounds: int = 30) -> DataFrame:
+    """Group near-dup pairs (id_a, id_b) into clusters: returns (id, rep)
+    where ``rep`` is the smallest id in the node's connected component —
+    the canonical representative for keep-one dedup. Ids may be of any
+    orderable type; string ids take the lexicographic minimum. A NULL id
+    raises TypeError; a self-pair (x, x) yields the row (x, x).
+
+    Algorithm: alternating large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC 2014). It
+    converges in O(log n) rounds independent of component diameter, so a
+    10^6-node chain costs ~20 rounds where min-label propagation needs
+    10^6. Each round is a few joins/aggregates over the edge list;
+    convergence is an edge-set checksum (count + hash-sum) going stable —
+    one tiny aggregate per round, and the driver only ever sees one row.
+    Raises if the edge set is still changing after ``max_rounds`` rounds:
+    a silently partial labeling must never escape."""
+    # Canonical edges are materialized ONCE: the pair pipeline feeding this
+    # is typically expensive (LSH / n-gram self-join) and must not
+    # re-execute. localCheckpoint each round, too: persist() alone leaves
+    # the logical plan nested round-over-round and Catalyst re-analysis
+    # goes superlinear after ~8 iterations (the classic iterative-DataFrame
+    # pitfall); checkpointing truncates lineage to the materialized result.
+    canon = _undirected_canon(pairs).localCheckpoint(eager=True)
+    proper = F.col("hi") != F.col("lo")
+    # one aggregate over the checkpoint: the NULL-id check plus the
+    # checksum of the starting edge set (an input that is already a star
+    # per component then converges after one round)
+    row = canon.agg(
+        F.count_if(F.col("hi").isNull()),
+        F.count(F.when(proper, 1)),
+        # decimal sum: 64-bit hash values overflow a long sum (ANSI)
+        F.sum(F.when(proper, F.xxhash64("hi", "lo")).cast("decimal(38,0)")),
+    ).collect()[0]
+    if row[0]:
+        raise TypeError(
+            f"connected_components: {row[0]} pair(s) have a NULL id — "
+            "filter or fill NULL ids before clustering"
+        )
+    prev_chk = tuple(row[1:])
+    E = canon.filter(proper)
     for _ in range(max_rounds):
         E = _small_star(_large_star(E)).localCheckpoint(eager=True)
         chk = tuple(
             E.agg(
                 F.count(F.lit(1)),
-                # decimal sum: 64-bit hash values overflow a long sum (ANSI)
-                F.sum(F.xxhash64(F.col("hi"), F.col("lo")).cast("decimal(38,0)")),
+                F.sum(F.xxhash64("hi", "lo").cast("decimal(38,0)")),
             ).collect()[0]
         )
         if chk == prev_chk:
-            converged = True
             break
         prev_chk = chk
-    if not converged:
-        raise RuntimeError(f"star CC: no convergence in {max_rounds} rounds")
+    else:
+        raise RuntimeError(
+            f"connected_components: no convergence in {max_rounds} rounds"
+        )
     # at convergence E is a star per component: every non-root points at
-    # the root; roots appear only on the lo side
+    # the root. Every root is the lo end of some canonical edge (its own
+    # self-pair included), so the canonical lo ids without a label are
+    # exactly the roots.
     labels = E.groupBy(F.col("hi").alias("id")).agg(F.min("lo").alias("rep"))
     roots = (
-        E.select(F.col("lo").alias("id"))
+        canon.select(F.col("lo").alias("id"))
         .distinct()
         .join(labels.select("id"), "id", "left_anti")
         .withColumn("rep", F.col("id"))

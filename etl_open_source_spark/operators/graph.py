@@ -2,7 +2,7 @@
 arithmetic.
 
 [EXT] per SURVEY.md §2 — the reference has no graph ops (transform
-vocabulary filter/map/merge, structure.txt:24); label-propagation
+vocabulary filter/map/merge, structure.txt:24); large-star/small-star
 connected components already live in operators/dedup.py, and PageRank is
 the other canonical iterative-on-Spark algorithm (importance scoring over
 an entity graph distilled from the fact tables).
@@ -75,10 +75,10 @@ def pagerank_integer(
             .cast("bigint")
             .alias("r"),
         )
-        # localCheckpoint each round, same as connected_components
-        # (dedup.py:311,401): without it round N's logical plan nests
-        # rounds 1..N-1 and Catalyst re-analysis goes superlinear once
-        # `iters` leaves the single digits. Eager: the graph is
+        # localCheckpoint each round, same as dedup.connected_components:
+        # without it round N's logical plan nests rounds 1..N-1 and
+        # Catalyst re-analysis goes superlinear once `iters` leaves the
+        # single digits. Eager: the graph is
         # entity-sized (nation-level), so materializing each round is
         # cheap and keeps driver-side plan memory flat.
         ranks = ranks.localCheckpoint(eager=True)

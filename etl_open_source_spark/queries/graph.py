@@ -1,7 +1,7 @@
 """Graph queries over the trade network distilled from the star schema.
 
 [EXT] per SURVEY.md §2 — iterative graph analytics (the other half of the
-iterative family next to label-propagation dedup clustering,
+iterative family next to connected-components dedup clustering,
 operators/dedup.py). The nation-level trade graph (supplier nation →
 customer nation, weight = lineitem count) is the canonical
 fact-table-to-entity-graph distillation.

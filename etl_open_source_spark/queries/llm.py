@@ -164,18 +164,18 @@ cc AS (SELECT id, MIN(rep) AS rep FROM walk GROUP BY id)
     "q_dedup_clusters",
     oracle=f"WITH RECURSIVE {_NGRAM_PAIRS_CTE} SELECT id, rep FROM cc",
     # not benched: the headline already times the dominant cost (the pair
-    # pipeline, as q_dedup_ngram); what CC adds is a handful of joins over
-    # the tiny pair graph whose local-mode cost is almost entirely
-    # per-iteration job-scheduling latency, not data-proportional work.
+    # pipeline, as q_dedup_ngram); what CC adds is a few star rounds of
+    # joins over the tiny pair graph whose local-mode cost is almost
+    # entirely per-round job-scheduling latency, not data-proportional work.
     tags=("llm", "dedup"),
 )
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER formation: n-gram Jaccard pairs → connected
     components → (id, min-id representative). Pair lists alone can't drive
     keep-one dedup (A~B, B~C must collapse to one group even when A~C was
-    never emitted); this is the missing step. Spark side iterates min-label
-    propagation (operators/dedup.py connected_components); the oracle
-    closes the same pair set with a recursive CTE."""
+    never emitted); this is the missing step. Spark side runs
+    large-star/small-star rounds (operators/dedup.py connected_components);
+    the oracle closes the same pair set with a recursive CTE."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.5, max_doc_freq=100
@@ -788,18 +788,17 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster formation via LARGE-STAR/SMALL-STAR alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round algorithm that replaces label propagation when a
-    component's DIAMETER is adversarial: a 10^6-node chain costs ~20
-    rounds here versus 10^6 label-propagation rounds, which is the
-    difference between a job and a hang at web-graph scale. Same
-    (id, min-id representative) contract and the same recursive-CTE
-    oracle as q_dedup_clusters — both algorithms converge to the
-    identical min-label fixpoint, so the driver value-hash proves the
-    exotic algorithm against the simple one's oracle. Convergence is
-    detected by an edge-set checksum going stable; per-round
-    localCheckpoint truncates lineage (operators/dedup.py:401)."""
+    the O(log n)-round algorithm that stays fast when a component's
+    DIAMETER is adversarial: a 10^6-node chain costs ~20 rounds, where
+    min-label propagation would need 10^6, which is the difference
+    between a job and a hang at web-graph scale. It is the engine's one
+    CC operator (operators/dedup.py connected_components), so this query
+    and q_dedup_clusters run the same plan; both names stay registered
+    against the same recursive-CTE oracle. Convergence is detected by an
+    edge-set checksum going stable; per-round localCheckpoint truncates
+    lineage."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
         d, "doc_id", "text", n=3, threshold=0.5, max_doc_freq=100
     )
-    return D.connected_components_star(pairs)
+    return D.connected_components(pairs)

@@ -419,9 +419,9 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, walk the halving chain k -> k/2 -> ... -> 1 and aggregate its
     depth and sum — the iterate-until-fixpoint surface (org hierarchies,
     BOM explosions, graph reachability) as plain SQL. Each iteration is
-    one distributed step; contrast the driver-loop variants in
-    operators/dedup.py connected_components (which add convergence
-    checks + lineage truncation the SQL form can't express)."""
+    one distributed step; contrast the driver loop in
+    operators/dedup.py connected_components (which adds a convergence
+    check + lineage truncation the SQL form can't express)."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql("""
       WITH RECURSIVE chain AS (

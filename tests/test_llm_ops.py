@@ -103,14 +103,25 @@ def test_simhash_self_similarity(spark, docs):
 
 
 def test_connected_components_shapes(spark):
-    """Chain, triangle-via-shared-member, isolated pair — min-label must
-    propagate across hops that were never emitted as a pair."""
+    """Chain, triangle-via-shared-member, isolated pair — the min id must
+    reach hops that were never emitted as a pair. A self-pair is a
+    singleton component (7) and is harmless on a node with other edges (4)."""
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
+        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22), (7, 7), (4, 4)],
         "id_a bigint, id_b bigint",
     )
     got = {r.id: r.rep for r in D.connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    assert got == {
+        1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20
+    }
+
+
+def test_connected_components_rejects_null_ids(spark):
+    """A NULL id is not a node: it must raise a typed error, not vanish
+    from (or silently shorten) its pair."""
+    pairs = spark.createDataFrame([(1, 2), (2, None)], "id_a bigint, id_b bigint")
+    with pytest.raises(TypeError, match="NULL"):
+        D.connected_components(pairs).collect()
 
 
 def test_connected_components_random_vs_union_find(spark):
@@ -343,16 +354,18 @@ def test_range_join_bucketed_boundaries(spark):
 
 
 def test_star_cc_matches_union_find_and_handles_chains(spark):
-    """large-star/small-star CC: correct on a random graph AND on a
-    200-node chain whose diameter would exceed label propagation's round
-    cap — diameter-independence is the point of the algorithm."""
+    """large-star/small-star CC: correct on a random graph, on a
+    diameter-6 chain, AND on a 200-node chain that converges in far fewer
+    rounds than its diameter — diameter-independence is the point of the
+    algorithm."""
     import random
 
     rng = random.Random(29)
     edges = [(rng.randrange(50), rng.randrange(50)) for _ in range(70)]
     edges = [(a, b) for a, b in edges if a != b]
     chain = [(i, i + 1) for i in range(1000, 1200)]  # diameter 200
-    all_edges = edges + chain
+    short_chain = [(i, i + 1) for i in range(2001, 2007)]  # diameter 6
+    all_edges = edges + chain + short_chain
 
     parent = {}
 
@@ -371,17 +384,17 @@ def test_star_cc_matches_union_find_and_handles_chains(spark):
     want = {x: find(x) for x in nodes}
 
     pairs = spark.createDataFrame(all_edges, "id_a bigint, id_b bigint")
-    got = {r.id: r.rep for r in D.connected_components_star(pairs, max_rounds=12).collect()}
+    got = {r.id: r.rep for r in D.connected_components(pairs, max_rounds=12).collect()}
     assert got == want  # 12 rounds suffice where propagation needs 200
 
 
 def test_label_cc_raises_instead_of_partial_labels(spark):
-    """Label propagation must fail loudly when the diameter exceeds its
+    """CC must fail loudly when the edge set is still changing at its
     round cap — a silently partial labeling corrupts dedup."""
     chain = [(i, i + 1) for i in range(40)]
     pairs = spark.createDataFrame(chain, "id_a bigint, id_b bigint")
-    with pytest.raises(RuntimeError, match="connected_components_star"):
-        D.connected_components(pairs, max_iterations=5)
+    with pytest.raises(RuntimeError, match="no convergence in 3 rounds"):
+        D.connected_components(pairs, max_rounds=3)
 
 
 def test_bpe_train_matches_reference(spark):
@@ -973,12 +986,12 @@ def test_word_shingles_precap_persist_equivalence(spark):
 
 
 def test_connected_components_sum_convergence_rounds(spark):
-    """r12 optimization: convergence is detected by the monotone label-sum
-    going stable (join-free). A diameter-d chain must still converge
-    within d+1 rounds — the same bound the old join-based check had."""
+    """Convergence is detected by the edge-set checksum going stable
+    (join-free). A diameter-d chain must still converge within d+1
+    rounds — the bound the earlier label-propagation check had."""
     chain = [(i, i + 1) for i in range(1, 7)]  # path 1-2-...-7, diameter 6
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    got = {r.id: r.rep for r in D.connected_components(pairs, max_iterations=7).collect()}
+    got = {r.id: r.rep for r in D.connected_components(pairs, max_rounds=7).collect()}
     assert got == {i: 1 for i in range(1, 8)}
 
 
@@ -1185,17 +1198,56 @@ def test_operator_cache_ownership_release(spark, sf_dir):
     assert release_operator_caches() == 0
 
 
-def test_connected_components_rejects_noncastable_ids(spark):
-    """ADVICE r12: the decimal label-sum convergence check must REFUSE ids
-    that cast to NULL (the sum would be NULL and None == None would
-    declare convergence after one round, silently returning partial
-    components) rather than proceed."""
-    pairs = spark.createDataFrame(
-        [("docA", "docB"), ("docB", "docC")], "id_a string, id_b string"
-    )
-    with pytest.raises(TypeError, match="cast cleanly"):
-        D.connected_components(pairs)
-    # digit strings cast cleanly and still work
-    ok = spark.createDataFrame([("1", "2"), ("2", "3")], "id_a string, id_b string")
-    got = {r.id: r.rep for r in D.connected_components(ok).collect()}
-    assert got == {"1": "1", "2": "1", "3": "1"}
+def test_connected_components_string_ids_match_union_find(spark):
+    """String ids cluster under string order: rep is the lexicographic
+    minimum. Mixed-length digit strings are the hostile case ('10' < '100'
+    < '9'): a numeric reading of the ids picks a different rep, and on the
+    path 5-8-16-24 the first min-label round keeps the numeric label sum
+    at 53, which a sum-based convergence check took for a fixpoint."""
+
+    def union_find(edges):
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {x: find(x) for e in edges for x in e}
+
+    for edges in (
+        [("5", "8"), ("8", "16"), ("16", "24")],
+        [("10", "9"), ("9", "100")],
+        [("docA", "docB"), ("docB", "docC")],
+    ):
+        pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+        got = {r.id: r.rep for r in D.connected_components(pairs).collect()}
+        assert got == union_find(edges)
+    assert union_find([("5", "8"), ("8", "16"), ("16", "24")])["5"] == "16"
+
+
+def test_operators_leave_session_conf_alone(spark, docs, monkeypatch):
+    """Operators share the caller's session (other threads may be planning
+    in it): running CC, keep-one dedup and the n-gram pair join must not
+    set a single session conf."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    pairs = D.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5, max_doc_freq=100)
+    pairs.collect()
+    D.connected_components(pairs).collect()
+    D.dedup_keep_representatives(docs, pairs, "doc_id").collect()
+    monkeypatch.undo()
+    assert calls == []

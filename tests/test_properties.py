@@ -1209,8 +1209,8 @@ def test_pagerank_deep_iteration_no_plan_blowup(spark_prop):
     without superlinear plan growth — pins the localCheckpoint-per-round
     lineage truncation in pagerank_integer (VERDICT r6 #6: without it,
     round N's logical plan nests rounds 1..N-1 and Catalyst re-analysis
-    blows up past ~8 iterations, same pitfall connected_components fixed
-    in operators/dedup.py:311,401)."""
+    blows up past ~8 iterations, same pitfall
+    operators/dedup.py connected_components avoids)."""
     from etl_open_source_spark.operators.graph import pagerank_integer
 
     nodes = list(range(6))
