@@ -1,9 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the correctness baseline; sign-LSH near-dup and
-IVF (inverted-file) ANN as the scale paths. All vector math is JVM-side
-higher-order functions (`zip_with` + `aggregate`) over double-cast arrays —
-no Python in the scoring loop.
+Brute-force cosine top-k is the correctness baseline; IVF, PQ, IVF-PQ and
+sign-LSH near-dup are the scale paths. Brute force scores in a numpy
+kernel behind ``mapInArrow`` (one pass per Arrow batch of corpus vectors,
+bit-identical to the JVM fold — see _brute_force_scores). Every other path
+is JVM-side higher-order functions (`zip_with` + `aggregate`) over
+double-cast arrays, with no Python in the scoring loop.
+
+The ANN paths compose one private helper per step: ``_usable`` (drop
+unusable vectors, keep the norm), ``_unit`` (normalize by that norm),
+``_pq_codes`` (PQ encode), ``_adc`` (asymmetric distance),
+``_nearest_centroids`` (IVF assign / probe), ``_rerank`` (exact cosine
+over a shortlist) and ``_top_n`` (per-key row_number window).
 
 At 100 TB: brute force is O(|Q|·|C|·d) — fine for small query sets against
 a broadcast corpus block, wrong for all-pairs. IVF cuts the corpus term to
@@ -64,14 +72,44 @@ def has_nonfinite(col) -> Column:
     return F.exists(c, lambda x: F.isnan(x) | (F.abs(x) == F.lit(float("inf"))))
 
 
-def _drop_zero_norm(df: DataFrame, vec: str = "v") -> DataFrame:
-    """Drop degenerate (all-zero, non-finite, null) vectors before
-    unit-normalization. A zero-norm row divides to NaN/null array
-    elements, and a NaN/Inf component poisons every downstream distance
-    — either fails a KMeans fit or silently emits null codes/distances.
-    A production encoder drops degenerate vectors at ingest, so every
-    normalizing entry point here does the same (ADVICE r6)."""
-    return df.filter(usable_norm(norm(F.col(vec))))
+def _usable(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str | None = None,
+    id_as: str | None = None,
+    v: str = "v",
+    vn: str = "vn",
+) -> DataFrame:
+    """The usable vectors of ``df`` as (id, v, vn): ``v`` is ``vec_col``
+    cast to double and ``vn`` its norm; ``id_col`` (renamed ``id_as``) is
+    kept when given. Degenerate vectors (all-zero, non-finite, NULL) are
+    dropped: a zero-norm row divides to NaN/null elements under
+    unit-normalization and raises ANSI divide-by-zero under cosine, and a
+    NaN/Inf component poisons every downstream distance. A production
+    encoder drops degenerate vectors at ingest, so every IVF, PQ and LSH
+    entry point reads its vectors through this one filter (ADVICE r6)."""
+    ids = [] if id_col is None else [F.col(id_col).alias(id_as or id_col)]
+    return (
+        df.select(*ids, as_double(vec_col).alias(v))
+        .withColumn(vn, norm(F.col(v)))
+        .filter(usable_norm(F.col(vn)))
+    )
+
+
+def _unit(v: str = "v", vn: str = "vn") -> Column:
+    """``v / vn`` per element: the unit vector, dividing by the norm column
+    ``_usable`` already computed instead of refolding the norm per
+    element."""
+    return F.transform(v, lambda x: x / F.col(vn))
+
+
+def _top_n(df: DataFrame, key: str, order: list[Column], n: int, rank: str = "rank") -> DataFrame:
+    """The first ``n`` rows per ``key`` under ``order``, numbered 1..n in
+    the bigint column ``rank``. A row_number window filtered ``<= n``, so
+    Catalyst plans a WindowGroupLimit that keeps n rows per key before the
+    shuffle."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return df.withColumn(rank, F.row_number().over(w).cast("bigint")).filter(F.col(rank) <= n)
 
 
 def brute_force_topk(
@@ -126,11 +164,7 @@ def brute_force_topk(
     scored = scored.filter(F.col("query_id") != F.col("neighbor_id")).select(
         "query_id", "neighbor_id", sim.alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_n(scored, "query_id", [F.col("sim").desc(), F.col("neighbor_id")], k)
 
 
 def _vec_for_arrow(vec_col: str, df: DataFrame) -> Column:
@@ -445,32 +479,40 @@ def _brute_force_scores(
 # ------------------------------------------------------------------ IVF
 
 
+def _nearest_centroids(
+    df: DataFrame,
+    key: str,
+    centroids: DataFrame,
+    n: int,
+    v: str,
+    vn: str | None,
+) -> DataFrame:
+    """``df`` plus ``bucket``, one row for each of the ``n`` centroids with
+    the highest cosine to ``v`` (ties to the lower centroid id) per
+    ``key``. ``vn`` is ``v``'s norm, or None when ``v`` is already unit.
+    Centroids are broadcast and scored in one pass; unusable centroids are
+    dropped, since a zero-norm centroid scores NaN, which sorts first
+    under DESC and would burn a probe on a degenerate bucket."""
+    cen = _usable(centroids, "centroid", "centroid_id", v="cv", vn="cn")
+    den = F.col("cn") if vn is None else F.col(vn) * F.col("cn")
+    sim = dot(F.col(v), F.col("cv")) / den
+    cols = df.columns
+    scored = df.crossJoin(broadcast(cen)).select(*cols, "centroid_id", sim.alias("__csim"))
+    return _top_n(
+        scored, key, [F.col("__csim").desc(), F.col("centroid_id")], n, "__crank"
+    ).select(*cols, F.col("centroid_id").alias("bucket"))
+
+
 def ivf_assign(
     corpus: DataFrame,
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (max cosine) →
-    (vec_id, embedding, bucket). Centroids are broadcast; one pass."""
-    # zero-norm guard (ADVICE r6): cosine divides by vn*cn, an ANSI
-    # divide-by-zero for a degenerate all-zero vector or centroid —
-    # drop both up front, same policy as the PQ entry points
-    c = corpus.select(F.col(id_col), as_double(vec_col).alias("v")).withColumn(
-        "vn", norm(F.col("v"))
-    ).filter(usable_norm(F.col("vn")))
-    cen = centroids.select(
-        F.col("centroid_id"), as_double("centroid").alias("cv")
-    ).withColumn("cn", norm(F.col("cv"))).filter(usable_norm(F.col("cn")))
-    sim = dot(F.col("v"), F.col("cv")) / (F.col("vn") * F.col("cn"))
-    w = Window.partitionBy(id_col).orderBy(F.col("csim").desc(), F.col("centroid_id"))
-    return (
-        c.crossJoin(broadcast(cen))
-        .select(id_col, "v", "vn", "centroid_id", sim.alias("csim"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col(id_col), F.col("v"), F.col("vn"), F.col("centroid_id").alias("bucket"))
-    )
+    """Assign each usable vector to its nearest centroid (max cosine) →
+    (vec_id, v, vn, bucket), ``v`` the double-cast vector and ``vn`` its
+    norm. Centroids are broadcast; one pass."""
+    return _nearest_centroids(_usable(corpus, vec_col, id_col), id_col, centroids, 1, "v", "vn")
 
 
 def sample_centroids(corpus: DataFrame, n: int = 16, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -541,15 +583,15 @@ def kmeans_centroids(
     # zero-norm vectors are dropped from training to match the engine-wide
     # drop policy (ivf_assign/ivf_topk never route them), so no centroid
     # collapses onto the origin.
-    v = _drop_zero_norm(corpus.select(as_double(vec_col).alias("__v")), "__v")
+    v = _usable(corpus, vec_col).select("v")
     if sample_fraction is not None:
         v = v.sample(fraction=sample_fraction, seed=seed)
-    ds = v.select(array_to_vector(F.col("__v")).alias("features")).persist()
+    ds = v.select(array_to_vector(F.col("v")).alias("features")).persist()
     # try/finally: _mean_vector raises EmptyTrainingSet on an empty corpus
     # AFTER the persist — without the finally, every empty-corpus query run
     # leaves a cached empty frame registered for the session (ADVICE r11).
     try:
-        n_eff = _k_clamped_to_distinct(v, F.col("__v"), n)
+        n_eff = _k_clamped_to_distinct(v, F.col("v"), n)
         if n_eff < 2:
             # KMeans rejects k=1, so this branch covers (a) an explicit n=1
             # request on a diverse corpus and (b) a fully-constant training
@@ -587,26 +629,11 @@ def ivf_topk(
     query instead of the whole corpus. Approximate (recall < 1) but the
     per-query cost drops from O(|C|) to O(|C|·nprobe/n_buckets)."""
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    # zero-norm guard on BOTH the centroid and query sides (corpus side
-    # lives inside ivf_assign): a zero-norm query makes sim = 0/0 = NaN
-    # for every candidate, and NaN sorts ABOVE all doubles under DESC —
-    # the degenerate query would return k arbitrary neighbors instead of
-    # being dropped per the _drop_zero_norm policy (self-review finding)
-    cen = centroids.select(F.col("centroid_id"), as_double("centroid").alias("cv")).withColumn(
-        "cn", norm(F.col("cv"))
-    ).filter(usable_norm(F.col("cn")))
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")).withColumn(
-        "qn", norm(F.col("qv"))
-    ).filter(usable_norm(F.col("qn")))
-    qsim = dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    wq = Window.partitionBy("query_id").orderBy(F.col("qsim").desc(), F.col("centroid_id"))
-    probes = (
-        q.crossJoin(broadcast(cen))
-        .select("query_id", "qv", "qn", "centroid_id", qsim.alias("qsim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "qn", F.col("centroid_id").alias("bucket"))
-    )
+    # zero-norm queries are dropped too: sim = 0/0 = NaN for every
+    # candidate, and NaN sorts ABOVE all doubles under DESC — the
+    # degenerate query would return k arbitrary neighbors
+    q = _usable(queries, vec_col, id_col, "query_id", v="qv", vn="qn")
+    probes = _nearest_centroids(q, "query_id", centroids, nprobe, "qv", "qn")
     sim = dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("vn"))
     if sim_decimals is not None:
         sim = F.round(sim, sim_decimals)
@@ -615,11 +642,7 @@ def ivf_topk(
         .filter(F.col("query_id") != F.col(id_col))
         .select("query_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_n(scored, "query_id", [F.col("sim").desc(), F.col("neighbor_id")], k)
 
 
 # ------------------------------------------------- embedding near-dup
@@ -657,9 +680,7 @@ def embedding_near_dup_pairs(
     # collides in EVERY band (a degenerate hot bucket) and then the exact
     # cosine verify divides by zero — drop it up front like the other
     # similarity entry points
-    v = corpus.select(F.col(id_col).alias("id"), as_double(vec_col).alias("v")).withColumn(
-        "vn", norm(F.col("v"))
-    ).filter(usable_norm(F.col("vn")))
+    v = _usable(corpus, vec_col, id_col, "id")
     v = v.withColumn(
         "v",
         F.when(F.size("v") == dim, F.col("v")).otherwise(
@@ -747,11 +768,10 @@ def pq_train(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    v = _drop_zero_norm(corpus.select(as_double(vec_col).alias("v")))
+    v = _usable(corpus, vec_col)
     if sample_fraction is not None:
         v = v.sample(fraction=sample_fraction, seed=seed)
-    nv = F.transform("v", lambda x: x / norm(F.col("v")))
-    v = v.select(nv.alias("v")).persist()
+    v = v.select(_unit().alias("v")).persist()
     # try/finally: the empty-corpus raise (and the dim%m assert) fire AFTER
     # the persist — without the finally, every such run leaves a cached
     # frame registered for the session (ADVICE r11).
@@ -813,30 +833,64 @@ def _l2sq(a, b) -> Column:
     return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x)
 
 
+def _pq_codes(v: str, codebooks: list[list[list[float]]]) -> Column:
+    """The m PQ codes of the unit vector column ``v`` as array<int>: per
+    subspace, the id of the nearest codeword by squared L2. Ties break to
+    the lowest code id (array_position returns the first minimum)."""
+    dsub = len(codebooks[0][0])
+    codes = []
+    for s, book in enumerate(codebooks):
+        sub = F.slice(v, s * dsub + 1, dsub)
+        dists = F.transform(_codebook_lit(book), lambda c: _l2sq(sub, c))
+        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
+    return F.array(*codes)
+
+
+def _adc(qv: str, codebooks: list[list[list[float]]]) -> Column:
+    """Asymmetric distance from the unit query column ``qv`` to the column
+    ``codes``: the squared L2 from each query subvector to its code's
+    codeword, summed over the m subspaces left to right."""
+    dsub = len(codebooks[0][0])
+    terms = [
+        _l2sq(
+            F.slice(qv, s * dsub + 1, dsub),
+            F.element_at(_codebook_lit(book), F.element_at("codes", s + 1) + 1),
+        )
+        for s, book in enumerate(codebooks)
+    ]
+    return sum(terms[1:], terms[0])
+
+
+def _rerank(
+    shortlist: DataFrame, corpus: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact-cosine top-k over a (query_id, qv, neighbor_id, adist)
+    shortlist whose ``qv`` is unit-norm. Only the shortlisted ids join to
+    the usable corpus's raw vectors. Returns (query_id, neighbor_id, adist,
+    rank), ranked by cosine rounded to 6 dp descending, neighbor id
+    tiebreak."""
+    c = _usable(corpus, vec_col, id_col, "neighbor_id")
+    sim = F.round(dot(F.col("qv"), F.col("v")) / F.col("vn"), 6)  # qv is unit-norm
+    scored = shortlist.join(c, "neighbor_id").select(
+        "query_id", "neighbor_id", "adist", sim.alias("__sim")
+    )
+    return _top_n(
+        scored, "query_id", [F.col("__sim").desc(), F.col("neighbor_id")], k
+    ).drop("__sim")
+
+
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Encode every vector to its m nearest-code ids → (id, codes
+    """Encode every usable vector to its m nearest-code ids → (id, codes
     array<int>). Entirely scan-local: the codebooks ride along as literal
     expressions and the per-subspace argmin is an array fold — zero
-    exchanges, zero Python. Ties break to the lowest code id
-    (array_position returns the first minimum)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    v = _drop_zero_norm(corpus.select(F.col(id_col), as_double(vec_col).alias("v")))
-    nv = F.transform("v", lambda x: x / norm(F.col("v")))
-    v = v.select(id_col, nv.alias("v"))
-    codes = []
-    for s in range(m):
-        sub = F.slice("v", s * dsub + 1, dsub)
-        dists = F.transform(_codebook_lit(codebooks[s]), lambda c: _l2sq(sub, c))
-        codes.append(
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        )
-    return v.select(id_col, F.array(*codes).alias("codes"))
+    exchanges, zero Python. Ties break to the lowest code id."""
+    v = _usable(corpus, vec_col, id_col).select(id_col, _unit().alias("v"))
+    return v.select(id_col, _pq_codes("v", codebooks).alias("codes"))
 
 
 def pq_topk(
@@ -851,76 +905,42 @@ def pq_topk(
 ) -> DataFrame:
     """ANN top-k by asymmetric distance (ADC): corpus vectors live only as
     their m-byte codes; each query scores a code by summing exact
-    query-subvector-to-centroid distances. The 8x-32x memory compression
+    query-subvector-to-codeword distances. The 8x-32x memory compression
     is the point at scale — the candidate scan touches codes, never raw
     vectors.
 
-    ``rerank=N`` enables the standard two-stage search: ADC shortlists N
-    candidates per query (vectors inside one quantization cell tie on
-    adist — a coarse codebook cannot order them), then ONLY the shortlist
-    joins back to raw vectors for exact cosine ranking. At scale that is
-    the whole point of PQ: the full scan reads m-byte codes; raw floats
-    are fetched for |Q|·N rows, not |C|.
+    Pipeline: ``pq_encode`` the corpus; drop unusable queries and
+    unit-normalize them; broadcast them onto the codes and score every
+    pair by ADC (literal-codebook lookups, scan-local, codegen); keep the
+    per-query top-k by a window (WindowGroupLimit). Returns (query_id,
+    neighbor_id, adist, rank), rank ascending by approximate distance with
+    neighbor id tiebreak.
 
-    Shape mirrors brute_force_topk: queries broadcast onto the encoded
-    corpus, per-pair distance is an m-term sum of literal-codebook
-    lookups (scan-local, codegen), then the per-query top-k window
-    (WindowGroupLimit). Returns (query_id, neighbor_id, adist, rank) —
-    rank ascending by approximate distance (or exact cosine descending
-    when re-ranking), neighbor id tiebreak."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
+    ``rerank=N`` enables the standard two-stage search: the window keeps
+    an ADC shortlist of N candidates per query (vectors inside one
+    quantization cell tie on adist — a coarse codebook cannot order them),
+    and ``_rerank`` joins ONLY the shortlist to the usable corpus's raw
+    vectors for the exact cosine ranking (rank then follows cosine
+    descending). At scale that is the whole point of PQ: the full scan
+    reads m-byte codes; raw floats are fetched for |Q|·N rows, not |C|."""
     enc = pq_encode(corpus, codebooks, id_col, vec_col)
-    q = _drop_zero_norm(
-        queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")),
-        "qv",
+    q = _usable(queries, vec_col, id_col, "query_id", v="qv", vn="qn").select(
+        "query_id", _unit("qv", "qn").alias("qv")
     )
-    qn = F.transform("qv", lambda x: x / norm(F.col("qv")))
-    q = q.select("query_id", qn.alias("qv"))
-    terms = []
-    for s in range(m):
-        qsub = F.slice("qv", s * dsub + 1, dsub)
-        centroid = F.element_at(
-            _codebook_lit(codebooks[s]), F.element_at("codes", s + 1) + 1
-        )
-        terms.append(_l2sq(qsub, centroid))
-    adist = sum(terms[1:], terms[0])
+    adist = _adc("qv", codebooks)
     if dist_decimals is not None:
         adist = F.round(adist, dist_decimals)
     scored = (
-        enc.crossJoin(broadcast(q.select("query_id", "qv")))
+        enc.crossJoin(broadcast(q))
         .filter(F.col("query_id") != F.col(id_col))
         .select("query_id", F.col(id_col).alias("neighbor_id"), adist.alias("adist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id"))
+    order = [F.col("adist").asc(), F.col("neighbor_id")]
     if rerank is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rank") <= k)
-        )
+        return _top_n(scored, "query_id", order, k)
     assert rerank >= k, "rerank shortlist must be at least k"
-    shortlist = (
-        scored.withColumn("__srn", F.row_number().over(w))
-        .filter(F.col("__srn") <= rerank)
-        .select("query_id", "neighbor_id", "adist")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv")
-    ).withColumn("cn", norm(F.col("cv")))
-    sim = dot(F.col("qv"), F.col("cv")) / F.col("cn")  # qv is unit-norm
-    rescored = (
-        shortlist.join(cv, "neighbor_id")
-        .join(broadcast(q), "query_id")
-        .select("query_id", "neighbor_id", "adist", F.round(sim, 6).alias("__sim"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .drop("__sim")
-    )
+    shortlist = _top_n(scored, "query_id", order, rerank).drop("rank")
+    return _rerank(shortlist.join(broadcast(q), "query_id"), corpus, k, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -941,75 +961,38 @@ def ivfpq_topk(
     ``rerank`` candidates touches raw floats for the exact cosine
     ranking.
 
+    Pipeline: ``ivf_assign`` buckets the usable corpus and each vector is
+    unit-normalized and PQ-encoded, keeping (id, bucket, codes); usable
+    queries are unit-normalized and probe their ``nprobe`` nearest
+    centroids; the probes equi-join the codes on the bucket id and score
+    by ADC; a per-query window keeps the ``rerank`` best; ``_rerank``
+    joins that shortlist to the usable corpus for the exact cosine top-k.
+    Returns (query_id, neighbor_id, adist, rank) like ``pq_topk`` with
+    ``rerank``.
+
     Cost per query: O(n_centroids) probe scoring + O(|C|·nprobe/n_buckets)
     ADC lookups + O(rerank·d) exact math — vs O(|C|·d) for brute force.
     Every stage is JVM-side: centroids and codebooks ride as broadcast /
-    literal expressions, the bucket restriction is an equi-join on the
-    bucket id, and the two rankings are per-query windows
+    literal expressions, and the two rankings are per-query windows
     (WindowGroupLimit)."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    # corpus zero-norm rows are already dropped INSIDE ivf_assign
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    nv = F.transform("v", lambda x: x / F.col("vn"))
-    codes = []
-    for s in range(m):
-        sub = F.slice(nv, s * dsub + 1, dsub)
-        dists = F.transform(_codebook_lit(codebooks[s]), lambda c: _l2sq(sub, c))
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1).cast("int"))
-    enc = assigned.select(
-        F.col(id_col), "v", "vn", "bucket", F.array(*codes).alias("codes")
+    enc = (
+        ivf_assign(corpus, centroids, id_col, vec_col)
+        .select(id_col, "bucket", _unit().alias("v"))
+        .select(id_col, "bucket", _pq_codes("v", codebooks).alias("codes"))
     )
-
-    # zero-norm centroid guard, matching ivf_topk/ivf_assign: qsim = dot/0
-    # is NaN, which sorts first under DESC and would burn a probe on an
-    # empty degenerate bucket.
-    cen = centroids.select(
-        F.col("centroid_id"), as_double("centroid").alias("cv")
-    ).withColumn("cn", norm(F.col("cv"))).filter(usable_norm(F.col("cn")))
-    q = _drop_zero_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv0")
-        ),
-        "qv0",
+    q = _usable(queries, vec_col, id_col, "query_id", v="qv", vn="qn").select(
+        "query_id", _unit("qv", "qn").alias("qv")
     )
-    q = q.select("query_id", F.transform("qv0", lambda x: x / norm(F.col("qv0"))).alias("qv"))
-    qsim = dot(F.col("qv"), F.col("cv")) / F.col("cn")
-    wq = Window.partitionBy("query_id").orderBy(F.col("qsim").desc(), F.col("centroid_id"))
-    probes = (
-        q.crossJoin(broadcast(cen))
-        .select("query_id", "qv", "centroid_id", qsim.alias("qsim"))
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", F.col("centroid_id").alias("bucket"))
-    )
-
-    terms = []
-    for s in range(m):
-        qsub = F.slice("qv", s * dsub + 1, dsub)
-        centroid = F.element_at(
-            _codebook_lit(codebooks[s]), F.element_at("codes", s + 1) + 1
-        )
-        terms.append(_l2sq(qsub, centroid))
-    adist = F.round(sum(terms[1:], terms[0]), 6)
+    probes = _nearest_centroids(q, "query_id", centroids, nprobe, "qv", None)
     scored = (
         probes.join(enc, "bucket")
         .filter(F.col("query_id") != F.col(id_col))
         .select(
             "query_id", "qv", F.col(id_col).alias("neighbor_id"),
-            "v", "vn", adist.alias("adist"),
+            F.round(_adc("qv", codebooks), 6).alias("adist"),
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id"))
-    shortlist = (
-        scored.withColumn("__srn", F.row_number().over(ws))
-        .filter(F.col("__srn") <= max(rerank, k))
-    )
-    sim = F.round(dot(F.col("qv"), F.col("v")) / F.col("vn"), 6)  # qv unit-norm
-    w2 = Window.partitionBy("query_id").orderBy(F.col("__sim").desc(), F.col("neighbor_id"))
-    return (
-        shortlist.select("query_id", "neighbor_id", "adist", sim.alias("__sim"))
-        .withColumn("rank", F.row_number().over(w2).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .drop("__sim")
-    )
+    shortlist = _top_n(
+        scored, "query_id", [F.col("adist").asc(), F.col("neighbor_id")], max(rerank, k)
+    ).drop("rank")
+    return _rerank(shortlist, corpus, k, id_col, vec_col)

@@ -328,9 +328,3 @@ def mongo_read_options(
         )
     opts.update(extra)
     return opts
-
-
-def read_mongo(spark: SparkSession, **kwargs) -> DataFrame:
-    """Apply ``mongo_read_options`` to a real reader (needs the MongoDB
-    Spark connector jar + a live server — neither in this harness)."""
-    return spark.read.format("mongodb").options(**mongo_read_options(**kwargs)).load()

@@ -188,11 +188,6 @@ def ddl_column_types(df: DataFrame) -> dict[str, str]:
     }
 
 
-def table_exists(spark: SparkSession, name: str) -> bool:
-    """Existence probe (parity: core/loaders/sqlserver.py:64-78)."""
-    return spark.catalog.tableExists(name)
-
-
 def write_jdbc(df: DataFrame, **kwargs) -> None:
     """Apply ``jdbc_write_options`` to a real JDBC writer.
 

@@ -81,27 +81,12 @@ def test_salted_join_identical_to_plain(spark, sf_dir):
 
 
 def test_write_compacted_file_budget(spark, sf_dir, tmp_path):
-    from etl_open_source_spark.sources.layout import parquet_file_count, write_compacted
+    from etl_open_source_spark.operators.maintenance import compact_parquet
 
     l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     out = str(tmp_path / "compacted")
-    write_compacted(l, out, target_files=3)
-    assert parquet_file_count(out) == 3
+    assert compact_parquet(spark, f"{sf_dir}/lineitem.parquet", out, num_files=3) == 3
     assert spark.read.parquet(out).count() == l.count()
-
-
-def test_write_range_sorted_prunes(spark, sf_dir, tmp_path):
-    from etl_open_source_spark.sources.layout import write_range_sorted
-
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    out = str(tmp_path / "range_sorted")
-    write_range_sorted(l, out, ["l_shipdate"], n_files=8)
-    back = spark.read.parquet(out)
-    assert back.count() == l.count()
-    # range predicate on the sort key: footer min/max stats let the scan
-    # skip most files — observable as fewer rows read than the total
-    narrow = back.filter("l_shipdate >= TIMESTAMP '2001-01-01 00:00:00'")
-    assert 0 < narrow.count() < back.count()
 
 
 def test_hive_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):

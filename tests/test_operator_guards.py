@@ -182,3 +182,19 @@ def test_pq_path_drops_zero_norm_vectors(spark):
     ivf = ivfpq_topk(df, df, cen, books, k=2, nprobe=2, rerank=3).toPandas()
     assert 3 not in set(ivf["query_id"]) and 3 not in set(ivf["neighbor_id"])
     assert not ivf["adist"].isna().any()
+
+    # an all-zero row sharing id 1 with a usable row: the exact-cosine
+    # rerank joins shortlisted ids back to the corpus, so it must read the
+    # corpus through the same zero-norm drop (else cosine divides by zero)
+    shadowed = df.unionByName(
+        spark.createDataFrame([(1, [0.0, 0.0, 0.0, 0.0])], df.schema)
+    )
+    clean = pq_topk(df, df, books, k=2, rerank=3).toPandas()
+    got = pq_topk(shadowed, shadowed, books, k=2, rerank=3).toPandas()
+    assert got.sort_values(["query_id", "rank"]).reset_index(drop=True).equals(
+        clean.sort_values(["query_id", "rank"]).reset_index(drop=True)
+    )
+    ivf2 = ivfpq_topk(shadowed, shadowed, cen, books, k=2, nprobe=2, rerank=3).toPandas()
+    assert ivf2.sort_values(["query_id", "rank"]).reset_index(drop=True).equals(
+        ivf.sort_values(["query_id", "rank"]).reset_index(drop=True)
+    )
