@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from etl_open_source_spark.operators.dedup import word_shingles
 from etl_open_source_spark.operators.sampling import det_hash
+from etl_open_source_spark.operators.text import words_col
 
 
 def decontaminate_hits(
@@ -268,13 +269,10 @@ def rep_ngram_stats(
     per-doc aggregate — both combine map-side, grams never cross docs so
     the shuffle key is (doc, gram) and skew is bounded by doc length.
     Scan-local per doc; no corpus-wide state at any scale."""
-    from etl_open_source_spark.operators.text import ascii_fold
-
-    words = F.split(ascii_fold(text_col), " ")
     terms = ", ".join(["' '" if j % 2 else f"__ws[i+{j // 2}]" for j in range(2 * n - 1)])
     grams = F.expr(f"transform(sequence(0, size(__ws) - {n}), i -> concat({terms}))")
     counts = (
-        df.withColumn("__ws", words)
+        df.withColumn("__ws", words_col(text_col))
         .filter(F.size("__ws") >= n)
         .select(F.col(id_col).alias("id"), F.explode(grams).alias("gram"))
         .groupBy("id", "gram")

@@ -8,20 +8,28 @@ Four families, each with a distinct scale profile:
                    prefix-filtered join of operators/setjoin.py —
                    O(Σ prefix-postings²) on hot shingles.
 - MinHash + LSH  : sub-quadratic near-dup at 100 TB: signatures (one
-                   shuffle), banding (hash-bucket join), exact verify only
-                   on candidates (setjoin.verify).
-- SimHash        : 64-bit fingerprints, hamming-band candidate join.
+                   shuffle), banding, exact verify only on candidates
+                   (setjoin.verify).
+- SimHash        : 64-bit fingerprints, banding on the four 16-bit bands,
+                   exact hamming verify.
+
+MinHash, SimHash and the sign-LSH embedding near-dup
+(operators/similarity.py) share ONE banding stage, :func:`banded_pairs`:
+each row's band keys are grouped into (band, key) buckets and the
+buckets expand to distinct id pairs. Each family only supplies its band
+keys and then verifies the candidates by joining its own data back.
 
 All JVM-side (built-in functions only — no Python UDFs in any hot path).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_open_source_spark.operators.caching import owned_persist
 from etl_open_source_spark.operators.setjoin import candidate_pairs, verify, with_prefix
+from etl_open_source_spark.operators.text import words_col
 
 # ---------------------------------------------------------------- exact
 
@@ -63,9 +71,7 @@ def _shingle_expr(n: int, distinct: bool) -> F.Column:
 
 
 def _with_words(df: DataFrame, text_col: str) -> DataFrame:
-    from etl_open_source_spark.operators.text import ascii_fold
-
-    return df.withColumn("__ws", F.split(ascii_fold(text_col), " "))
+    return df.withColumn("__ws", words_col(text_col))
 
 
 def word_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -112,14 +118,7 @@ def shingle_positions(
     )
 
 
-def word_shingles(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    max_doc_freq: int | None = None,
-    persist: bool = False,
-) -> DataFrame:
+def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles: (id, shingle) with the shingle as a
     64-bit xxhash64 of its n words — the n-gram string is never built
     (no concat allocations) and every downstream join/groupBy keys on an
@@ -128,37 +127,9 @@ def word_shingles(
     ~ppb error in intersection counts at 10¹² — the standard trade in
     shingle-based dedup, and what MinHash does anyway).
 
-    ``max_doc_freq`` drops shingles appearing in more than that many docs
-    — the skew guard for the inverted-index join (a shingle in 1M docs
-    creates 10^12 join rows); pairs sharing ONLY ultra-common shingles are
-    then missed, by design.
-
-    ``persist=True`` caches the PRE-cap explode: the hot-list aggregate and
-    every downstream consumer (self-join sides, size counts) then read the
-    cached rows instead of re-scanning + re-shingling the corpus — with the
-    cap this halves the corpus passes (the old shape persisted the POST-cap
-    frame, whose one materialization ran the explode twice: once for the
-    hot-list build, once for the anti-join's left side). The returned
-    capped frame itself stays lazy — the anti-join is a broadcast hash
-    probe per cached row, far cheaper than a second cache. Callers own the
-    session-lifetime cache exactly as they did with their own persist()."""
-    out = shingle_positions(df, id_col, text_col, n, distinct=True)
-    if persist:
-        out = owned_persist(out)
-    if max_doc_freq is not None:
-        # The hot list is |{shingles with df > cap}| — tiny by construction
-        # (bounded by corpus_size/cap) — so broadcast it: the anti-join then
-        # costs one map-side pass instead of re-shuffling every (id, shingle)
-        # pair. The df count itself is map-side-combinable (partial counts
-        # per distinct shingle per task), never a full-row shuffle.
-        hot = (
-            out.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_doc_freq)
-            .select("shingle")
-        )
-        out = out.join(F.broadcast(hot), "shingle", "left_anti")
-    return out
+    The posting-list skew guard (``max_doc_freq``) lives on the set-join
+    input, :func:`_doc_sets`, not here."""
+    return shingle_positions(df, id_col, text_col, n, distinct=True)
 
 
 # ------------------------------------------------- exact n-gram Jaccard
@@ -300,25 +271,19 @@ def minhash_lsh_pairs(
     rows): P(candidate) = 1-(1-j^r)^b ≈ .9998 at j=0.8 with 16×4).
 
     Scale path: nothing here is quadratic in corpus size — signatures are
-    one shuffle, banding is an equi-join on (band, key), verification
+    one shuffle, banding (:func:`banded_pairs`) is one more, verification
     touches only candidate pairs.
 
     ``max_bucket_size`` is the banding-side skew guard (the analog of
     ``max_doc_freq`` for the shingle join): band keys are 64-bit hashes,
     so two docs share a bucket only when a whole band of their signatures
     agrees — but a *degenerate* corpus (say 1M byte-identical docs) puts
-    all of them in the same bucket in EVERY band, and the candidate join
-    explodes quadratically per bucket (10¹² pairs at 1M). Buckets are
-    materialized with a single ``groupBy(band, key).collect_list(id)``
-    and over-cap buckets are filtered out BEFORE pair explosion — one
-    shuffle, no persist, no self-join (an earlier hot-list + broadcast
-    anti-join + equi-self-join shape cost an extra aggregate and two
-    persists for the same semantics). Aggregation memory per bucket is
-    8 bytes x bucket size (a 1M-doc degenerate bucket folds an 8 MB
-    array), bounded in practice because ``exact_dedup`` runs first so
-    identical docs collapse to one representative and never form such
-    buckets. Pairs discoverable ONLY through an over-cap bucket are
-    missed by design."""
+    all of them in the same bucket in EVERY band, and the pair expansion
+    is quadratic per bucket (10¹² pairs at 1M). Over-cap buckets are
+    dropped before they expand, bounded in practice because
+    ``exact_dedup`` runs first so identical docs collapse to one
+    representative and never form such buckets. Pairs discoverable ONLY
+    through an over-cap bucket are missed by design."""
     # Persist per-doc shingle ARRAYS (scan-local to build — no explode, no
     # groupBy), derive the exploded view for the signature aggregate by a
     # scan-local explode off the cache, and verify candidates on the two
@@ -338,11 +303,13 @@ def lsh_candidate_pairs(
     bands: int = 16,
     max_bucket_size: int | None = 1000,
 ) -> DataFrame:
-    """Banding stage of MinHash-LSH: (id, h0..h{n-1}) signatures →
-    distinct candidate (id_a, id_b) pairs, id_a < id_b. Split out of
-    ``minhash_lsh_pairs`` so the skew guard's candidate-count bound is
-    directly measurable (tests/test_properties.py pins it against a
-    degenerate corpus)."""
+    """MinHash candidates: (id, h0..h{n-1}) signatures → distinct
+    (id_a, id_b) pairs, id_a < id_b, of docs whose signatures agree on a
+    whole band of ``num_hashes // bands`` rows. The band key is
+    xxhash64(band, rows…), so equal rows in different bands never meet.
+    Split out of ``minhash_lsh_pairs`` so the skew guard's candidate-count
+    bound is directly measurable (tests/test_properties.py pins it
+    against a degenerate corpus)."""
     rows = num_hashes // bands
     # single parsed expression (identical tree to the old per-Column
     # composition, same int-literal band seed): the Column API paid one
@@ -355,7 +322,26 @@ def lsh_candidate_pairs(
         )
         + ")"
     )
-    banded = sig.select(
+    return banded_pairs(sig, band_keys, max_bucket_size)
+
+
+def banded_pairs(
+    df: DataFrame, band_keys: Column, max_bucket_size: int | None = None
+) -> DataFrame:
+    """The LSH banding stage shared by MinHash, SimHash and the sign-LSH
+    embedding near-dup: distinct ``(id_a, id_b)`` pairs, id_a < id_b, of
+    ``df.id`` rows whose ``band_keys`` arrays hold an equal key at the
+    same position. Keys must be non-NULL.
+
+    Buckets are materialized with a single
+    ``groupBy(band, key).collect_list(id)`` and expanded to pairs — one
+    shuffle, no persist, no self-join, and nothing but the (band, key, id)
+    rows crosses it: callers verify by joining their own data back onto
+    the distinct candidates. Aggregation memory per bucket is 8 bytes ×
+    bucket size (a 1M-row degenerate bucket folds an 8 MB array).
+    ``max_bucket_size`` drops over-cap buckets BEFORE they expand; ``None``
+    keeps every bucket."""
+    banded = df.select(
         F.col("id"), F.posexplode(band_keys).alias("band", "band_key")
     )
     buckets = banded.groupBy("band", "band_key").agg(
@@ -500,21 +486,16 @@ def dedup_keep_representatives(
 # -------------------------------------------------------------- SimHash
 
 
-def simhash_bands(
-    df: DataFrame, id_col: str, text_col: str, bands: int = 4
-) -> DataFrame:
+def simhash_bands(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash as 4×16-bit band columns (id, b0..b3).
 
     Bit i of the fingerprint is the sign of Σ_tokens (±1 by bit i of
-    xxhash64(token)). Stored banded so (a) candidate generation is an
-    equi-join on any identical band, (b) hamming distance is
+    xxhash64(token)). Stored banded so (a) the four band columns are the
+    LSH band keys themselves, (b) hamming distance is
     Σ bit_count(xor(band_a, band_b)) without a 64-bit assemble."""
-    assert bands == 4, "fixed 4×16 layout"
-    from etl_open_source_spark.operators.text import ascii_fold
-
-    words = F.split(ascii_fold(text_col), " ")
     toks = df.select(
-        F.col(id_col).alias("id"), F.explode(F.array_distinct(words)).alias("tok")
+        F.col(id_col).alias("id"),
+        F.explode(F.array_distinct(words_col(text_col))).alias("tok"),
     )
     # parsed-expression construction (same trees as the old per-Column
     # composition): 64 sum aggs + 4×16 band folds built via the Column API
@@ -548,17 +529,7 @@ def simhash_pairs(
     share at least one exact 16-bit band (pigeonhole: guarantees recall for
     distance <= 3; probabilistic above)."""
     sig = simhash_bands(df, id_col, text_col)
-    banded = sig.select(
-        "id", F.posexplode(F.array("b0", "b1", "b2", "b3")).alias("band", "key")
-    )
-    a = banded.select(F.col("id").alias("id_a"), "band", "key")
-    b = banded.select(F.col("id").alias("id_b"), "band", "key")
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cand = banded_pairs(sig, F.array("b0", "b1", "b2", "b3"))
     sa = sig.select(*[F.col(c).alias(f"{c}_a") for c in sig.columns])
     sb = sig.select(*[F.col(c).alias(f"{c}_b") for c in sig.columns])
     hamming = sum(

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_open_source_spark.operators.text import ascii_fold, words_col
+
 
 def sorted_neighborhood_pairs(
     df: DataFrame,
@@ -47,9 +49,7 @@ def sorted_neighborhood_pairs(
     and the Jaccard verify is per-row array arithmetic. Output columns:
     ``id_a < id_b`` canonical, ``jaccard`` rounded to 6 places.
     """
-    from etl_open_source_spark.operators.text import ascii_fold
-
-    toks = F.array_distinct(F.split(ascii_fold(text_col), " "))
+    toks = F.array_distinct(words_col(text_col))
     sk = F.substring(
         ascii_fold(text_col) if key is None else key, 1, key_len
     )

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from etl_open_source_spark.operators.dedup import banded_pairs
+
 
 class EmptyTrainingSet(ValueError):
     """No usable vectors remain to fit a quantizer (empty corpus, or every
@@ -662,8 +664,18 @@ def embedding_near_dup_pairs(
     4×4 so near-identical vectors collide in at least one band with
     overwhelming probability; exact cosine verifies candidates.
 
+    Banding is the shared LSH stage, :func:`operators.dedup.banded_pairs`,
+    over ``(id, bits)`` only: just the 16-byte (band, key, id) rows cross
+    the band shuffle, never one vector per band. The cosine is then
+    verified by joining ``v``/``vn`` back onto the distinct candidates,
+    once per pair. Duplicate-id contract (as in :mod:`operators.setjoin`):
+    ids are expected to be unique; rows that share an id are never paired
+    with each other, and a candidate pair (x, y) is scored once per
+    combination of rows carrying x and y, so a doubled input row yields a
+    doubled output row.
+
     Sizing at scale: the per-band keyspace is 2^(planes/bands), and the
-    band self-join costs Σ bucket² — so ``planes``/``bands`` must grow
+    pair expansion costs Σ bucket² — so ``planes``/``bands`` must grow
     with the corpus until corpus/2^(planes/bands) is a tolerable bucket
     size (e.g. 64 planes × 8 bands → 256-bucket bands for fixtures;
     256 planes × 16 bands → 65k-bucket bands for billions of rows).
@@ -708,7 +720,6 @@ def embedding_near_dup_pairs(
         return dot(F.col("v"), comps)
 
     bits = [F.when(plane_dot(p) > 0, 1).otherwise(0).alias(f"bit{p}") for p in range(planes)]
-    sig = v.select("id", "v", "vn", *bits)
     per_band = planes // bands
     band_keys = F.array(
         *[
@@ -718,15 +729,18 @@ def embedding_near_dup_pairs(
             for b in range(bands)
         ]
     )
-    banded = sig.select("id", "v", "vn", F.posexplode(band_keys).alias("band", "key"))
-    a = banded.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("vn").alias("na"), "band", "key")
-    b = banded.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("vn").alias("nb"), "band", "key")
+    pairs = banded_pairs(v.select("id", *bits), band_keys)
+
+    def side(s: str) -> DataFrame:
+        return v.select(
+            F.col("id").alias(f"id_{s}"), F.col("v").alias(f"v{s}"), F.col("vn").alias(f"n{s}")
+        )
+
     sim = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        pairs.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
         .select("id_a", "id_b", F.round(sim, 6).alias("sim"))
-        .distinct()
         .filter(F.col("sim") >= threshold)
     )
 

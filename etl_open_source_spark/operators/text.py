@@ -65,6 +65,8 @@ def normalize_ws(text_col: str | Column) -> Column:
 
 
 def words_col(text_col: str) -> Column:
+    """The word tokenizer of the TOKENIZATION CONTRACT above: ASCII-fold,
+    split on one literal space. Every word-level operator tokenizes here."""
     return F.split(ascii_fold(text_col), " ")
 
 

@@ -70,6 +70,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Name every whole-stage class GeneratedIterator instead of suffixing
+        # the codegen stage id. Under AQE the ids follow the order in which
+        # query stages (cache stages included) are re-planned, which varies
+        # from run to run, and the id is part of the source the class cache
+        # is keyed by: the same stage then missed the cache and recompiled
+        # (up to 6 classes per repeated round of the bench queries, none with
+        # this setting).
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Spark 4.1's checksum checkpoint manager deadlocks committing
         # HDFSBackedStateStore state for applyInPandasWithState on local
         # filesystems; plain checkpoint files are fine for our use.

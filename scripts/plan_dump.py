@@ -7,7 +7,12 @@ Usage:
 Writes plans/<tag>/<query>_{before,after}.txt, the evidence behind a plan
 claim (Exchange counts, join strategies, PushedFilters, BatchEvalPython
 nodes): run it with ``before`` on the parent commit and ``after`` on the
-change, then diff the pairs.
+change. An ``after`` run compares each dump with the query's ``before``
+dump, when there is one, below the header line and prints ``identical`` or
+``CHANGED`` per query plus a count at the end; diff a changed pair by hand.
+Attribute ids (``doc_id#12L``) count up across the session, so a query's
+dump depends on the queries planned before it: give both phases the same
+query list in the same order.
 
 Queries whose fn eagerly runs jobs while building the DataFrame (iterative
 CC, KMeans fits, sink round-trips) still work here: the explain captures
@@ -49,6 +54,7 @@ def main() -> None:
     spark = get_spark(app_name=f"{args.tag}-plan-dump")
     out_dir = os.path.join(ROOT, "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
+    compared, changed = 0, []
     for name in names:
         # bench.py clearCache()s between samples — match those conditions so
         # a previous query's persist() can't ride into this plan as an
@@ -62,7 +68,19 @@ def main() -> None:
         with open(path, "w") as fh:
             fh.write(f"-- {name} @ {sf_dir} ({args.phase})\n")
             fh.write(plan)
-        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
+        note = ""
+        before = os.path.join(out_dir, f"{name}_before.txt")
+        if args.phase == "after" and os.path.exists(before):
+            with open(before) as fh:
+                same = fh.read().split("\n", 1)[-1] == plan
+            compared += 1
+            note = ", identical to before" if same else ", CHANGED from before"
+            if not same:
+                changed.append(name)
+        print(f"wrote {path} ({plan.count('Exchange')} Exchange refs{note})")
+    if compared:
+        print(f"{compared - len(changed)} of {compared} identical to before; changed: "
+              + (" ".join(changed) or "none"))
     spark.stop()
 
 

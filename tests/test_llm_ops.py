@@ -74,11 +74,12 @@ def test_ngram_skew_guard_bounds_candidates(spark):
     assert (100, 101) in pairs
     assert len(pairs) < 10
 
-    # the guard also bounds the candidate join itself: every surviving
-    # posting list has <= max_doc_freq entries
-    sh = D.word_shingles(d, "doc_id", "text", 3, max_doc_freq=5)
+    # the guard also bounds the candidate join itself: every posting list
+    # of the capped doc sets the set join reads has <= max_doc_freq entries
     from pyspark.sql import functions as F
 
+    sets = D._doc_sets(d, "doc_id", "text", 3, max_doc_freq=5)
+    sh = sets.select(F.explode("arr").alias("shingle"))
     max_df = sh.groupBy("shingle").count().agg(F.max("count")).collect()[0][0]
     assert max_df <= 5
 
@@ -965,24 +966,6 @@ def test_pq_train_k1_codebook_is_subspace_mean(spark):
     assert [len(b) for b in books] == [1, 1]
     assert abs(books[0][0][0] - exp0) < 1e-12
     assert abs(books[1][0][0] - exp1) < 1e-12
-
-
-def test_word_shingles_precap_persist_equivalence(spark):
-    """r12 optimization: persist=True caches the PRE-cap explode (one
-    corpus scan instead of two) — the capped output must be identical to
-    the unpersisted path, and the cap must still drop hot shingles."""
-    rows = [(i, "alpha beta gamma delta common common common") for i in range(8)]
-    rows += [(100, "unique words only here nothing shared at all")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    spark.catalog.clearCache()
-    capped_p = D.word_shingles(df, "doc_id", "text", 3, max_doc_freq=5, persist=True)
-    capped = D.word_shingles(df, "doc_id", "text", 3, max_doc_freq=5, persist=False)
-    assert sorted(map(tuple, capped_p.collect())) == sorted(map(tuple, capped.collect()))
-    # the 8 duplicate docs share every shingle (df=8 > 5) -> all dropped;
-    # the unique doc's shingles (df=1) survive
-    ids = {r["id"] for r in capped_p.collect()}
-    assert ids == {100}
-    spark.catalog.clearCache()
 
 
 def test_connected_components_sum_convergence_rounds(spark):

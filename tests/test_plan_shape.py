@@ -120,6 +120,28 @@ def test_set_join_plan_shape_pinned(spark, sf_dir, name, exchanges, persists):
     assert n_cached == persists, plan
 
 
+@pytest.mark.parametrize(
+    "name, exchanges",
+    [
+        ("q_dedup_near", 5),
+        ("q_dedup_simhash", 7),
+        ("q_dedup_embedding", 4),
+    ],
+)
+def test_lsh_banding_plan_shape_pinned(spark, sf_dir, name, exchanges):
+    """MinHash, SimHash and sign-LSH embedding near-dup share one banding
+    stage (dedup.banded_pairs): exactly one collect_list bucket aggregate
+    and no (band, key) self-join. The embedding path verifies by joining
+    the vectors back onto the distinct candidates, so only (id, band keys)
+    feed the band shuffle."""
+    plan = _formatted_plan(spark, sf_dir, name)
+    band_aggs = [
+        l for l in plan.splitlines() if l.startswith("Functions") and "[collect_list(" in l
+    ]
+    assert len(band_aggs) == 1, plan
+    assert _n_exchanges(plan) == exchanges, plan
+
+
 def test_doc_chunk_is_scan_local(spark, sf_dir):
     """Chunking must be a pure map stage: generator explode over the scan,
     no shuffle anywhere — that's what lets 100 TB chunk at scan speed."""

@@ -386,13 +386,14 @@ def test_ngram_doc_freq_cap_bounds_postings_and_keeps_recall(spark_prop):
     shingle skew, while pair-unique planted dup shingles (doc freq 2)
     pass through untouched — exact Jaccard on them is unaffected."""
     from etl_open_source_spark.operators.dedup import (
+        _doc_sets,
         ngram_jaccard_pairs,
-        word_shingles,
     )
     from pyspark.sql import functions as F
 
     df = _skew_corpus(spark_prop)
-    capped_sh = word_shingles(df, "doc_id", "text", 3, max_doc_freq=50)
+    capped_sets = _doc_sets(df, "doc_id", "text", 3, max_doc_freq=50)
+    capped_sh = capped_sets.select(F.explode("arr").alias("shingle"))
     max_posting = (
         capped_sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
