@@ -14,28 +14,41 @@ tests run clearCache-scoped assertions. The API exists for the remaining
 context — a long-lived session running many queries (ADVICE r11 /
 VERDICT r12 item 6: unbounded session-lifetime caches) — and is O(1) per
 persist: a list of references, no weak magic, deterministic release
-order (LIFO)."""
+order (LIFO), scoped to one session."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import threading
+
+from pyspark.sql import DataFrame, SparkSession
 
 _OWNED: list[DataFrame] = []
+_LOCK = threading.Lock()  # sessions on other threads persist and release concurrently
 
 
 def owned_persist(df: DataFrame) -> DataFrame:
     """persist() + register for a later release_operator_caches()."""
     df = df.persist()
-    _OWNED.append(df)
+    with _LOCK:
+        _OWNED.append(df)
     return df
 
 
-def release_operator_caches() -> int:
-    """Unpersist every operator-registered cache (LIFO); returns the
-    number released. Safe to call repeatedly and with actions still
-    unrun — Spark recomputes an unpersisted frame from lineage."""
-    n = 0
-    while _OWNED:
-        _OWNED.pop().unpersist()
-        n += 1
-    return n
+def release_operator_caches(spark: SparkSession | None = None) -> int:
+    """Unpersist the operator-registered caches of ``spark`` — the
+    thread's active session when None — LIFO; returns the number
+    released. Other sessions' caches stay. Safe to call repeatedly and
+    with actions still unrun — Spark recomputes an unpersisted frame from
+    lineage."""
+    spark = spark or SparkSession.getActiveSession()
+    if spark is None:
+        return 0
+    mine, others = [], []
+    with _LOCK:
+        for df in _OWNED:
+            same = df.sparkSession._jsparkSession.equals(spark._jsparkSession)
+            (mine if same else others).append(df)
+        _OWNED[:] = others
+    for df in reversed(mine):
+        df.unpersist()
+    return len(mine)

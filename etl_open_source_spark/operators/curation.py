@@ -22,9 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_open_source_spark.operators.dedup import word_shingles
+from etl_open_source_spark.operators.dedup import shingle_positions, word_shingles
 from etl_open_source_spark.operators.sampling import det_hash
-from etl_open_source_spark.operators.text import words_col
 
 
 def decontaminate_hits(
@@ -265,17 +264,15 @@ def rep_ngram_stats(
     times in that same doc (``rep_frac``) and by the single most frequent
     n-gram (``top_frac``). Templated/spammy docs score high on both.
 
-    Plan: explode to (doc, gram), one (doc, gram) counting aggregate, one
-    per-doc aggregate — both combine map-side, grams never cross docs so
-    the shuffle key is (doc, gram) and skew is bounded by doc length.
-    Scan-local per doc; no corpus-wide state at any scale."""
-    terms = ", ".join(["' '" if j % 2 else f"__ws[i+{j // 2}]" for j in range(2 * n - 1)])
-    grams = F.expr(f"transform(sequence(0, size(__ws) - {n}), i -> concat({terms}))")
+    Plan: explode to (doc, shingle) positions with the engine's one
+    hashed n-gram expression (dedup.shingle_positions), one (doc, shingle)
+    counting aggregate, one per-doc aggregate — both combine map-side,
+    grams never cross docs so the shuffle key is (doc, shingle) and skew
+    is bounded by doc length. Scan-local per doc; no corpus-wide state at
+    any scale."""
     counts = (
-        df.withColumn("__ws", words_col(text_col))
-        .filter(F.size("__ws") >= n)
-        .select(F.col(id_col).alias("id"), F.explode(grams).alias("gram"))
-        .groupBy("id", "gram")
+        shingle_positions(df, id_col, text_col, n, distinct=False)
+        .groupBy("id", "shingle")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     rep = F.sum(F.when(F.col("cnt") >= 2, F.col("cnt")).otherwise(F.lit(0)))

@@ -567,22 +567,18 @@ def ngram_containment_pairs(
     t·min(n_a, n_b), so only the SMALLER doc gets a prefix bound (a tiny
     doc can be contained in any suffix of a huge one): candidates come
     from smaller-prefix ⋈ larger-full. The one exact intersection per
-    unordered pair is divided by each side's own size to emit both
-    directed rows.
+    unordered pair is divided by each side's own size; both directed rows
+    come from that one verified row (``inline`` over a two-struct array),
+    so the candidate join and verify run once.
 
     ``max_doc_freq`` bounds every posting list exactly as in the Jaccard
     path."""
     docs = with_prefix(_doc_sets(df, id_col, text_col, n, max_doc_freq), threshold)
     inter = verify(candidate_pairs(docs, symmetric=False), docs)
-    directed = inter.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "inter",
-        F.col("n_a").alias("n"),
-    ).unionAll(
-        inter.select(
-            F.col("id_b").alias("src"), F.col("id_a").alias("dst"), "inter",
-            F.col("n_b").alias("n"),
-        )
-    )
+    directed = inter.select(F.inline(F.array(*[
+        F.struct(F.col(s).alias("src"), F.col(d).alias("dst"), "inter", F.col(n).alias("n"))
+        for s, d, n in (("id_a", "id_b", "n_a"), ("id_b", "id_a", "n_b"))
+    ])))
     return (
         directed.withColumn("containment", F.col("inter") / F.col("n"))
         .filter(F.col("containment") >= threshold)

@@ -27,7 +27,7 @@ class ConnectionConfig:
 
     id: str
     name: str
-    type: str  # "parquet" | "csv" | "json" | "jdbc"
+    type: str  # any case: parquet|csv|json|jdbc|sqlserver|postgres|mysql|mongo (CONNECTORS)
     params: dict = field(default_factory=dict)
 
 
@@ -35,10 +35,12 @@ class ConnectionConfig:
 class Step:
     """One pipeline step (reference core/models.py:9-13,22-31).
 
-    config, by step_type:
-      extract  : {"table": path-or-name} | {"query": sql}
-      transform: {"type": "sql", "sql": ...} | {"type": "python", "fn": name}
-      load     : {"path": ..., "mode": "append"|"replace", "format": ...}
+    config, by step_type (no connection: the step's "format", default parquet):
+      extract  : {"table"|"path": files} | {"query": Spark SQL}; jdbc family
+                 {"table"} | {"query"}; mongo {} (the connection names it)
+      transform: {"type": "sql"|"python"|"sanitize"|"expect"|"operator", ...}
+      load     : {"path": ..., "mode": "append"|"replace"|"overwrite_partitions"
+                 (parquet only)}; jdbc family {"table": ..., "mode": ...}
     """
 
     id: str

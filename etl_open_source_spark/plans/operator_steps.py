@@ -24,6 +24,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_open_source_spark.operators.quality import Check, accepted, in_range, not_null, unique
+
 
 @dataclass(frozen=True)
 class OperatorStep:
@@ -135,3 +137,28 @@ def run_operator_step(df: DataFrame, cfg: dict) -> DataFrame:
     if missing:
         raise ValueError(f"operator step {name!r} missing config keys {missing}")
     return op.fn(df, cfg)
+
+
+# ------------------------------------------------------------ expect checks
+
+
+@dataclass(frozen=True)
+class ExpectCheck:
+    build: Callable[[dict], tuple[Check, F.Column]]  # check -> (Check, violations agg)
+    required: tuple[str, ...]  # check fields validate_spec enforces
+
+
+def _min_rows(c: dict) -> tuple[Check, F.Column]:
+    n = int(c["n"])
+    shortfall = F.greatest(F.lit(0).cast("bigint"), (F.lit(n) - F.count(F.lit(1))).cast("bigint"))
+    return Check(f"min_rows({n})", "min_rows"), shortfall
+
+
+# check kinds of an {"type": "expect", "checks": [...]} step (operators.quality.run_checks)
+EXPECT_CHECKS: dict[str, ExpectCheck] = {
+    "not_null": ExpectCheck(lambda c: not_null(c["col"]), ("col",)),
+    "unique": ExpectCheck(lambda c: unique(c["col"]), ("col",)),
+    "in_range": ExpectCheck(lambda c: in_range(c["col"], c["lo"], c["hi"]), ("col", "lo", "hi")),
+    "accepted": ExpectCheck(lambda c: accepted(c["col"], c["values"]), ("col", "values")),
+    "min_rows": ExpectCheck(_min_rows, ("n",)),
+}

@@ -2,6 +2,11 @@
 (reference core/engine.py:28-96): sort steps by order, thread ONE dataset
 through extract → transform → load, record running/success/error history.
 
+Extract and load dispatch on the connector table (plans/connections.py):
+files, jdbc and its dialects read and write, mongo only reads. The
+reference dispatches SQL Server only; its other DBMS types are comments
+(core/engine.py:110-135,175-188).
+
 Differences by design: the dataset is a lazy distributed DataFrame (nothing
 materializes until the load action); history is an append-only parquet log
 (reference uses SQLite rows, storage/repository.py:336-364); transforms are
@@ -19,25 +24,9 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_open_source_spark.plans.connections import (
-    _DIALECT_TYPES as _JDBC_DIALECT_TYPES,
-)
-from etl_open_source_spark.plans.connections import jdbc_connection_options
+from etl_open_source_spark.plans.connections import step_connector
 from etl_open_source_spark.plans.models import PipelineSpec, Step, StepType
 from etl_open_source_spark.plans.sanitize import sanitize_nulls
-from etl_open_source_spark.sources.readers import (
-    jdbc_query_options,
-    read_csv,
-    read_jdbc,
-    read_json,
-    read_parquet,
-)
-from etl_open_source_spark.sources.writers import (
-    write_csv,
-    write_jdbc,
-    write_json,
-    write_parquet,
-)
 
 # createOrReplaceTempView("input") is session-global; overlapping
 # scheduler threads must not swap each other's dataset between view
@@ -143,8 +132,11 @@ class PipelineRunner:
         (core/extractors/sqlserver.py:52). The watermark predicate is a
         plain Catalyst filter, so it pushes into the parquet scan / JDBC
         query and an incremental run touches only new row groups."""
-        df = self._extract_full(spec, step)
+        conn, entry = step_connector(spec, step)
+        if entry is None:
+            raise ValueError(f"unsupported extract format: {conn.type}")
         cfg = step.config
+        df = entry.read(self.spark, conn, cfg)
         # truthiness, matching validate_spec's predicate — a null/empty
         # watermark_col must mean "not incremental", not a KeyError mid-run
         if cfg.get("watermark_col"):
@@ -162,60 +154,6 @@ class PipelineRunner:
                 if new_wm is not None:
                     store.set(key, new_wm)
         return df
-
-    def _extract_full(self, spec: PipelineSpec, step: Step) -> DataFrame:
-        cfg = step.config
-        conn = spec.connection(step.connection_id)
-        fmt = (conn.type if conn else cfg.get("format", "parquet")).lower()
-        if fmt == "jdbc" or fmt in _JDBC_DIALECT_TYPES:
-            # The reference's core path: a live DBMS source. "query" pushes
-            # arbitrary SQL to the source engine (core/extractors/
-            # sqlserver.py:46-55); "table" reads a table, optionally as a
-            # partitioned parallel extract. Live-tested against embedded
-            # Derby in tests/test_plans_jdbc.py. Dialect connection types
-            # (sqlserver/postgres/mysql) resolve to URL+driver through the
-            # same options builder — without this branch a dialect 'query'
-            # would silently run on Spark's local catalog instead of the
-            # remote DBMS.
-            opts = jdbc_connection_options(conn)
-            url = opts.pop("url")
-            if "query" in cfg:
-                return (
-                    self.spark.read.format("jdbc")
-                    .options(**jdbc_query_options(url, cfg["query"], **opts))
-                    .load()
-                )
-            part = {
-                k: cfg[k]
-                for k in ("partition_column", "lower_bound", "upper_bound", "num_partitions")
-                if k in cfg
-            }
-            return read_jdbc(self.spark, url=url, table=cfg["table"], **part, **opts)
-        if "query" in cfg:
-            # No DBMS connection: the source engine IS Spark SQL over the
-            # registered catalog.
-            return self.spark.sql(cfg["query"])
-        path = cfg.get("table") or cfg.get("path")
-        opts = dict(conn.params) if conn else {}
-        if fmt == "parquet":
-            return read_parquet(self.spark, path)
-        if fmt == "csv":
-            # Foreign-file dialect by default (bare empty field = NULL);
-            # plans reading engine-written CSV opt into the \N dialect
-            # explicitly via `"dialect": "engine"` (ADVICE r8).
-            # Step config overrides connection params for BOTH schema and
-            # dialect — one precedence order, the intuitive one (ADVICE r9:
-            # these two previously resolved conflicts in opposite
-            # directions).
-            return read_csv(
-                self.spark,
-                path,
-                schema=cfg.get("schema") or opts.get("schema"),
-                dialect=cfg.get("dialect", opts.get("dialect", "foreign")),
-            )
-        if fmt == "json":
-            return read_json(self.spark, path, schema=cfg.get("schema") or opts.get("schema"))
-        raise ValueError(f"unsupported extract format: {fmt}")
 
     def _transform(self, step: Step, data: DataFrame) -> DataFrame:
         cfg = step.config
@@ -252,38 +190,16 @@ class PipelineRunner:
         in history — if any check has violations. ``on_fail: "warn"``
         downgrades to a log line so exploratory pipelines keep flowing.
         The dataset passes through unchanged."""
-        from pyspark.sql import functions as F
-
-        from etl_open_source_spark.operators.quality import (
-            Check,
-            accepted,
-            in_range,
-            not_null,
-            run_checks,
-            unique,
-        )
+        from etl_open_source_spark.operators.quality import run_checks
+        from etl_open_source_spark.plans.operator_steps import EXPECT_CHECKS
 
         cfg = step.config
         row_checks = []
         for c in cfg["checks"]:
-            kind = c["kind"]
-            if kind == "not_null":
-                row_checks.append(not_null(c["col"]))
-            elif kind == "unique":
-                row_checks.append(unique(c["col"]))
-            elif kind == "in_range":
-                row_checks.append(in_range(c["col"], c["lo"], c["hi"]))
-            elif kind == "accepted":
-                row_checks.append(accepted(c["col"], c["values"]))
-            elif kind == "min_rows":
-                n = int(c["n"])
-                shortfall = F.greatest(
-                    F.lit(0).cast("bigint"),
-                    (F.lit(n) - F.count(F.lit(1))).cast("bigint"),
-                )
-                row_checks.append((Check(f"min_rows({n})", "min_rows"), shortfall))
-            else:
-                raise ValueError(f"unknown expect check kind: {kind!r}")
+            check = EXPECT_CHECKS.get(c["kind"])
+            if check is None:
+                raise ValueError(f"unknown expect check kind: {c['kind']!r}")
+            row_checks.append(check.build(c))
         failed = [
             (r.rule, r.violations)
             for r in run_checks(data, row_checks).collect()
@@ -300,37 +216,7 @@ class PipelineRunner:
         return data
 
     def _load(self, spec: PipelineSpec, step: Step, data: DataFrame) -> None:
-        cfg = step.config
-        conn = spec.connection(step.connection_id)
-        fmt = (conn.type if conn else cfg.get("format", "parquet")).lower()
-        mode = cfg.get("mode", "append")
-        if fmt == "jdbc" or fmt in _JDBC_DIALECT_TYPES:
-            # Executor-parallel batched insert with optional auto-DDL —
-            # replaces the reference's per-row INSERT loop
-            # (core/loaders/sqlserver.py:282-286). Dialect types resolve
-            # URL+driver through the shared options builder.
-            opts = jdbc_connection_options(conn)
-            write_jdbc(
-                data,
-                url=opts.pop("url"),
-                table=cfg["table"],
-                mode=mode,
-                column_types=cfg.get("column_types"),
-                **opts,
-            )
-            return
-        path = cfg["path"]
-        # optional output-layout control: "repartition": N sizes the output
-        # to N even files (round-robin) — the spec-level answer to the
-        # small-files problem (cf. operators/maintenance.compact_parquet)
-        n_files = cfg.get("repartition")
-        if n_files:
-            data = data.repartition(int(n_files))
-        if fmt == "parquet":
-            write_parquet(data, path, mode=mode, partition_by=cfg.get("partition_by"))
-        elif fmt == "csv":
-            write_csv(data, path, mode=mode)
-        elif fmt == "json":
-            write_json(data, path, mode=mode)
-        else:
-            raise ValueError(f"unsupported load format: {fmt}")
+        conn, entry = step_connector(spec, step)
+        if entry is None or entry.write is None:
+            raise ValueError(f"unsupported load format: {conn.type}")
+        entry.write(data, conn, step.config)

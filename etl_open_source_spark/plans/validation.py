@@ -4,14 +4,19 @@ service (services/validation_service.py, 0 bytes; structure.txt:65
 
 Static checks only (no Spark session needed); schema-level validation
 happens for free at Catalyst analysis time when the pipeline runs.
+Connection types, formats, operator names and expect check kinds are
+checked against the same tables the runner dispatches on
+(plans/connections.py, plans/operator_steps.py).
 """
 
 from __future__ import annotations
 
-from etl_open_source_spark.plans.cron import next_run_from_cron
-from etl_open_source_spark.plans.models import PipelineSpec, StepType
-
 from datetime import datetime
+
+from etl_open_source_spark.plans.connections import connector, step_connector
+from etl_open_source_spark.plans.cron import next_run_from_cron
+from etl_open_source_spark.plans.models import PipelineSpec, Step, StepType
+from etl_open_source_spark.plans.operator_steps import EXPECT_CHECKS, OPERATOR_STEPS
 
 
 def validate_spec(spec: PipelineSpec) -> list[str]:
@@ -26,8 +31,13 @@ def validate_spec(spec: PipelineSpec) -> list[str]:
 
     conn_ids = {c.id for c in spec.connections}
     for c in spec.connections:
-        if (c.type or "").lower() == "jdbc" and not c.params.get("url"):
-            issues.append(f"jdbc connection {c.id!r} missing 'url' in params")
+        entry = connector(c.type)
+        if entry is None:
+            issues.append(f"connection {c.id!r} has unsupported type {c.type!r}")
+        elif missing := entry.missing(c.params):
+            issues.append(
+                f"{c.type} connection {c.id!r} missing {', '.join(map(repr, missing))} in params"
+            )
     for s in spec.steps:
         if s.connection_id is not None and s.connection_id not in conn_ids:
             issues.append(f"step {s.name!r} references unknown connection {s.connection_id!r}")
@@ -39,102 +49,86 @@ def validate_spec(spec: PipelineSpec) -> list[str]:
         )
 
     for s in ordered:
-        cfg = s.config
-        if s.step_type == StepType.EXTRACT:
-            conn = spec.connection(s.connection_id)
-            if conn is not None and (conn.type or "").lower() == "jdbc":
-                # a jdbc extract that reaches the runner without query/table
-                # raises a raw KeyError mid-run; catch it at validation
-                if not (cfg.get("query") or cfg.get("table")):
-                    issues.append(
-                        f"jdbc extract step {s.name!r} needs 'query' or 'table'"
-                    )
-            elif not (cfg.get("query") or cfg.get("table") or cfg.get("path")):
-                issues.append(f"extract step {s.name!r} needs 'query', 'table' or 'path'")
-            if cfg.get("watermark_col") and not cfg.get("state_path"):
-                # incremental extract with nowhere to persist the watermark
-                # would re-read everything every run, silently
-                issues.append(
-                    f"incremental extract step {s.name!r} has 'watermark_col' "
-                    f"but no 'state_path'"
-                )
         if s.step_type == StepType.TRANSFORM:
-            kind = cfg.get("type", "sql")
-            if kind == "sql" and not cfg.get("sql"):
-                issues.append(f"sql transform step {s.name!r} missing 'sql'")
-            if kind == "python" and not cfg.get("fn"):
-                issues.append(f"python transform step {s.name!r} missing 'fn'")
-            if kind == "operator":
-                from etl_open_source_spark.plans.operator_steps import OPERATOR_STEPS
-
-                op = OPERATOR_STEPS.get(cfg.get("name"))
-                if op is None:
-                    issues.append(
-                        f"operator step {s.name!r} has unknown operator "
-                        f"{cfg.get('name')!r} (available: {sorted(OPERATOR_STEPS)})"
-                    )
-                else:
-                    missing = [k for k in op.required if k not in cfg]
-                    if missing:
-                        issues.append(
-                            f"operator step {s.name!r} ({cfg['name']}) missing "
-                            f"config keys {missing}"
-                        )
-            if kind == "expect":
-                _REQUIRED = {
-                    "not_null": ("col",),
-                    "unique": ("col",),
-                    "in_range": ("col", "lo", "hi"),
-                    "accepted": ("col", "values"),
-                    "min_rows": ("n",),
-                }
-                checks = cfg.get("checks")
-                if not checks:
-                    issues.append(f"expect step {s.name!r} has no 'checks'")
-                for c in checks or []:
-                    ck = c.get("kind")
-                    if ck not in _REQUIRED:
-                        issues.append(
-                            f"expect step {s.name!r} has unknown check kind {ck!r}"
-                        )
-                    else:
-                        missing = [f for f in _REQUIRED[ck] if f not in c]
-                        if missing:
-                            issues.append(
-                                f"expect step {s.name!r} check {ck!r} missing {missing}"
-                            )
-        if s.step_type == StepType.LOAD:
-            conn = spec.connection(s.connection_id)
-            if conn is not None and (conn.type or "").lower() == "jdbc":
-                if not cfg.get("table"):
-                    issues.append(f"jdbc load step {s.name!r} missing 'table'")
-            elif not cfg.get("path"):
-                issues.append(f"load step {s.name!r} missing 'path'")
-            if cfg.get("mode") == "overwrite_partitions":
-                fmt = (
-                    (conn.type if conn is not None else None)
-                    or cfg.get("format", "parquet")
-                ).lower()
-                if fmt != "parquet":
-                    # only the parquet writer implements dynamic overwrite;
-                    # csv/json/jdbc would die mid-pipeline with a mode error
-                    issues.append(
-                        f"load step {s.name!r} uses mode "
-                        f"'overwrite_partitions' but format {fmt!r} does not "
-                        f"support it (parquet only)"
-                    )
-                if not cfg.get("partition_by"):
-                    # without partition_by, dynamic overwrite degenerates to
-                    # a full truncate — the exact data-loss the mode exists
-                    # to prevent; fail at validate time, not mid-write
-                    issues.append(
-                        f"load step {s.name!r} uses mode 'overwrite_partitions' "
-                        f"but has no 'partition_by'"
-                    )
+            issues += _transform_issues(s)
+        else:
+            issues += _io_issues(spec, s)
 
     try:
         next_run_from_cron(spec.cron, datetime(2026, 1, 1))
     except Exception as ex:  # noqa: BLE001 — report, don't raise
         issues.append(f"invalid cron {spec.cron!r}: {ex}")
 
+    return issues
+
+
+def _io_issues(spec: PipelineSpec, s: Step) -> list[str]:
+    """Extract/load step checks against the step's connector entry — each
+    catches what would otherwise raise mid-run (a raw KeyError, a mode
+    error in the writer)."""
+    cfg, kind = s.config, s.step_type.value
+    conn, entry = step_connector(spec, s)
+    if entry is None:  # a named connection's bad type is reported once, above
+        return [] if s.connection_id else [
+            f"{kind} step {s.name!r} has unsupported format {conn.type!r}"
+        ]
+    issues = []
+    if s.connection_id is None and entry.missing(conn.params):
+        issues.append(f"{kind} step {s.name!r} format {conn.type!r} needs a connection")
+    if s.step_type == StepType.EXTRACT:
+        if entry.extract_keys and not any(cfg.get(k) for k in entry.extract_keys):
+            keys = " or ".join(map(repr, entry.extract_keys))
+            issues.append(f"{conn.type} extract step {s.name!r} needs {keys}")
+        if cfg.get("watermark_col") and not cfg.get("state_path"):
+            # incremental extract with nowhere to persist the watermark
+            # would re-read everything every run, silently
+            issues.append(
+                f"incremental extract step {s.name!r} has 'watermark_col' but no 'state_path'"
+            )
+        return issues
+    target, mode = ("table" if entry.jdbc else "path"), cfg.get("mode", "append")
+    if entry.write is None:
+        issues.append(f"load step {s.name!r}: {conn.type!r} does not support loading")
+    else:
+        if not cfg.get(target):
+            issues.append(f"{conn.type} load step {s.name!r} missing {target!r}")
+        if mode not in entry.modes:  # e.g. only parquet implements dynamic overwrite
+            issues.append(
+                f"load step {s.name!r} uses mode {mode!r} but format {conn.type!r} "
+                f"does not support it"
+            )
+    if mode == "overwrite_partitions" and not cfg.get("partition_by"):
+        # without partition_by, dynamic overwrite degenerates to a full
+        # truncate — the exact data-loss the mode exists to prevent
+        issues.append(
+            f"load step {s.name!r} uses mode 'overwrite_partitions' but has no 'partition_by'"
+        )
+    return issues
+
+
+def _transform_issues(s: Step) -> list[str]:
+    cfg, issues = s.config, []
+    kind = cfg.get("type", "sql")
+    if kind == "sql" and not cfg.get("sql"):
+        issues.append(f"sql transform step {s.name!r} missing 'sql'")
+    if kind == "python" and not cfg.get("fn"):
+        issues.append(f"python transform step {s.name!r} missing 'fn'")
+    if kind == "operator":
+        op = OPERATOR_STEPS.get(cfg.get("name"))
+        if op is None:
+            issues.append(
+                f"operator step {s.name!r} has unknown operator "
+                f"{cfg.get('name')!r} (available: {sorted(OPERATOR_STEPS)})"
+            )
+        elif missing := [k for k in op.required if k not in cfg]:
+            issues.append(f"operator step {s.name!r} ({cfg['name']}) missing config keys {missing}")
+    if kind == "expect":
+        if not cfg.get("checks"):
+            issues.append(f"expect step {s.name!r} has no 'checks'")
+        for c in cfg.get("checks") or []:
+            check = EXPECT_CHECKS.get(c.get("kind"))
+            if check is None:
+                issues.append(f"expect step {s.name!r} has unknown check kind {c.get('kind')!r}")
+            elif missing := [f for f in check.required if f not in c]:
+                issues.append(f"expect step {s.name!r} check {c['kind']!r} missing {missing}")
     return issues

@@ -772,8 +772,9 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     resemblance structurally misses (a short doc quoted inside a long one
     has C ≈ 1 but Jaccard ≈ |A|/|B| ≈ 0). Same single inverted-index
     self-join as q_dedup_ngram (each unordered intersection computed
-    once, both directions emitted by a cheap union), same max_doc_freq
-    posting cap; exact values, so the oracle matches bit-for-bit."""
+    once; both directions are emitted from its one verified row), same
+    max_doc_freq posting cap; exact values, so the oracle matches
+    bit-for-bit."""
     d = load_table(spark, sf_dir, "documents")
     return D.ngram_containment_pairs(
         d, "doc_id", "text", n=3, threshold=0.6, max_doc_freq=100

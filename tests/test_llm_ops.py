@@ -1181,6 +1181,30 @@ def test_operator_cache_ownership_release(spark, sf_dir):
     assert release_operator_caches() == 0
 
 
+def test_operator_cache_release_is_per_session(spark):
+    """release_operator_caches(s) unpersists only the frames registered
+    from session s; another session's operator cache stays cached."""
+    from pyspark import StorageLevel
+
+    from etl_open_source_spark.operators.caching import (
+        owned_persist,
+        release_operator_caches,
+    )
+
+    none = StorageLevel(False, False, False, False, 1)
+    s1, s2 = spark.newSession(), spark.newSession()
+    # distinct plans: the cache manager is shared across sessions and
+    # would serve both frames from one entry if their plans matched
+    a = owned_persist(s1.range(11))
+    b = owned_persist(s2.range(13))
+    a.count(), b.count()
+    assert release_operator_caches(s1) == 1
+    assert a.storageLevel == none
+    assert b.storageLevel != none
+    assert release_operator_caches(s2) == 1
+    assert b.storageLevel == none
+
+
 def test_connected_components_string_ids_match_union_find(spark):
     """String ids cluster under string order: rep is the lexicographic
     minimum. Mixed-length digit strings are the hostile case ('10' < '100'
