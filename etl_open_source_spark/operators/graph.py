@@ -125,8 +125,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     the wedge, so no triangle is double-counted and no /6 fixup is
     needed. Two shuffles (wedge build, close join); nothing quadratic in
     a hub's raw degree."""
-    edges = owned_persist(edges)
-    oriented = owned_persist(orient_by_degree(edges))
+    oriented = orient_by_degree(edges)
     w1 = oriented.select(F.col("src"), F.col("dst").alias("x"))
     w2 = oriented.select(F.col("src"), F.col("dst").alias("y"))
     wedges = w1.join(w2, "src").filter(F.col("x") < F.col("y"))

@@ -35,6 +35,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_open_source_spark.sources.writers import write_files
+
 
 def snapshot_diff(
     old: DataFrame, new: DataFrame, keys: list[str], compare: list[str]
@@ -128,7 +130,7 @@ def compact_parquet(
         total = _parquet_bytes(src_dir)
         num_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(src_dir)
-    df.repartition(num_files).write.mode("overwrite").parquet(dst_dir)
+    write_files(df.repartition(num_files), dst_dir, "parquet", "replace")
     return _parquet_file_count(dst_dir)
 
 

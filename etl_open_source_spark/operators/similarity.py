@@ -205,35 +205,24 @@ def _vec_matrix_groups(vec_arr):
     groups: dict[int, tuple] = {}
     if n == 0:
         return groups, norms
-    flat = None
-    if vec_arr.null_count == 0:
-        flat = vec_arr.flatten()
-        if flat.null_count != 0:
-            flat = None
-    if flat is not None:
-        # fast path (no NULL rows/elements): one flat buffer + a vectorized
-        # gather per dim group — zero Python-object churn
-        lens = pc.list_value_length(vec_arr).to_numpy().astype(np.int64)
-        vals = np.asarray(flat.to_numpy(zero_copy_only=False), dtype=np.float64)
-        starts = np.concatenate(([0], np.cumsum(lens[:-1])))
-        for d in np.unique(lens):
-            rows = np.nonzero(lens == d)[0]
-            d = int(d)
-            idx = starts[rows][None, :] + np.arange(d)[:, None]
-            groups[d] = (rows, vals[idx])
-    else:
-        pyrows = vec_arr.to_pylist()
-        by_dim: dict[int, list[int]] = {}
-        for i, v in enumerate(pyrows):
-            if v is None or any(x is None for x in v):
-                continue  # norm would be NULL → usable_norm drops the row
-            by_dim.setdefault(len(v), []).append(i)
-        for d, ridx in by_dim.items():
-            rows = np.asarray(ridx, dtype=np.int64)
-            M = np.asarray([pyrows[i] for i in ridx], dtype=np.float64).reshape(
-                rows.size, d
-            )
-            groups[d] = (rows, np.ascontiguousarray(M.T))
+    # one flat buffer + a vectorized gather per dim group, NULL rows and
+    # rows with a NULL element included: a NULL row counts as length 0,
+    # and both kinds are left out of every group (their norm stays NaN)
+    flat = vec_arr.flatten()
+    lens = pc.list_value_length(vec_arr).fill_null(0).to_numpy().astype(np.int64)
+    usable = np.asarray(vec_arr.is_valid().to_numpy(zero_copy_only=False), dtype=bool)
+    if flat.null_count:
+        # each flattened value's row; not pc.list_parent_indices, which also
+        # counts the values a NULL row may hide, where flatten() skips them
+        parents = np.repeat(np.arange(n), lens)
+        usable[parents[np.asarray(flat.is_null().to_numpy(zero_copy_only=False))]] = False
+    vals = np.asarray(flat.fill_null(0).to_numpy(zero_copy_only=False), dtype=np.float64)
+    starts = np.concatenate(([0], np.cumsum(lens[:-1])))
+    for d in np.unique(lens[usable]):
+        rows = np.nonzero(usable & (lens == d))[0]
+        d = int(d)
+        idx = starts[rows][None, :] + np.arange(d)[:, None]
+        groups[d] = (rows, vals[idx])
     # errstate: overflow/invalid (e.g. a 1e308² square, a NaN element) are
     # the exact IEEE results the JVM fold produces silently — the row is
     # then dropped by the usable_norm predicate; don't spam worker stderr

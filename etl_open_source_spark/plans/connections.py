@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_open_source_spark.plans.models import ConnectionConfig, PipelineSpec, Step
 from etl_open_source_spark.sources import readers as R
 from etl_open_source_spark.sources import writers as W
+from etl_open_source_spark.sources.formats import BASIC_MODES, file_format
 
 Reader = Callable[[SparkSession, ConnectionConfig, dict], DataFrame]  # (spark, conn, step cfg)
 Writer = Callable[[DataFrame, ConnectionConfig, dict], None]  # (data, conn, step cfg)
@@ -32,16 +33,20 @@ class Connector:
     extract_keys: tuple[str, ...]  # an extract step names one of these
     read: Reader
     write: Writer | None  # None: extract-only
-    modes: frozenset[str] = frozenset(W.VALID_BASIC_MODES)  # load modes
+    modes: frozenset[str] = BASIC_MODES  # load modes
 
     def missing(self, params: dict) -> list[str]:
         return [k for k in self.params if not params.get(k)]
 
 
-def _file_reader(read: Callable[[SparkSession, str, dict], DataFrame]) -> Reader:
-    """A 'query' runs on Spark SQL over the registered catalog (no DBMS sits
-    behind a file connection); else 'table' or 'path' names the files. Step
-    config overrides connection params, one precedence for every option."""
+def _file(fmt: str) -> Connector:
+    """A file format. Extract: a 'query' runs on Spark SQL over the
+    registered catalog (no DBMS sits behind a file connection); else
+    'table' or 'path' names the files, and step config overrides
+    connection params, one precedence for every option. Load:
+    "repartition": N sizes the output to N even files — the spec-level
+    answer to the small-files problem (cf. maintenance.compact_parquet)."""
+    spec = file_format(fmt)
 
     def extract(spark: SparkSession, conn: ConnectionConfig, cfg: dict) -> DataFrame:
         if "query" in cfg:
@@ -49,20 +54,19 @@ def _file_reader(read: Callable[[SparkSession, str, dict], DataFrame]) -> Reader
         path = cfg.get("table") or cfg.get("path")
         if not path:
             raise ValueError(f"{conn.type} source needs a 'table' or 'path'")
-        return read(spark, path, {**conn.params, **cfg})
+        o = {**conn.params, **cfg}
+        # foreign-file dialect unless the plan opts into "engine" (ADVICE r8)
+        return R.read_files(spark, path, fmt, schema=o.get("schema"),
+                            dialect=o.get("dialect", "foreign"))
 
-    return extract
-
-
-def _file_writer(write: Callable[[DataFrame, str, str, dict], None]) -> Writer:
     def load(data: DataFrame, conn: ConnectionConfig, cfg: dict) -> None:
-        # "repartition": N sizes the output to N even files — the spec-level
-        # answer to the small-files problem (cf. maintenance.compact_parquet)
         if cfg.get("repartition"):
             data = data.repartition(int(cfg["repartition"]))
-        write(data, cfg["path"], cfg.get("mode", "append"), cfg)
+        # partition_by only where the format takes it; csv/json loads ignore it
+        W.write_files(data, cfg["path"], fmt, cfg.get("mode", "append"),
+                      cfg.get("partition_by") if spec.partitioned else None)
 
-    return load
+    return Connector((), None, ("query", "table", "path"), extract, load, spec.modes)
 
 
 def _dialect_options(dialect: str, params: dict) -> dict[str, str]:
@@ -105,28 +109,10 @@ def _read_mongo(spark: SparkSession, conn: ConnectionConfig, cfg: dict) -> DataF
     return spark.read.format("mongodb").options(**opts).load()
 
 
-_FILE_KEYS, _JDBC_KEYS = ("query", "table", "path"), ("query", "table")
+_JDBC_KEYS = ("query", "table")
 
 CONNECTORS: dict[str, Connector] = {
-    "parquet": Connector(
-        (), None, _FILE_KEYS,
-        _file_reader(lambda spark, path, o: R.read_parquet(spark, path)),
-        _file_writer(lambda df, path, mode, cfg: W.write_parquet(
-            df, path, mode=mode, partition_by=cfg.get("partition_by"))),
-        frozenset(W.VALID_MODES),
-    ),
-    "csv": Connector(
-        (), None, _FILE_KEYS,
-        # foreign-file NULL dialect unless the plan opts into "engine" (ADVICE r8)
-        _file_reader(lambda spark, path, o: R.read_csv(
-            spark, path, schema=o.get("schema"), dialect=o.get("dialect", "foreign"))),
-        _file_writer(lambda df, path, mode, cfg: W.write_csv(df, path, mode=mode)),
-    ),
-    "json": Connector(
-        (), None, _FILE_KEYS,
-        _file_reader(lambda spark, path, o: R.read_json(spark, path, schema=o.get("schema"))),
-        _file_writer(lambda df, path, mode, cfg: W.write_json(df, path, mode=mode)),
-    ),
+    **{fmt: _file(fmt) for fmt in ("parquet", "csv", "json")},
     # raw jdbc: params (with 'url') are the options
     "jdbc": Connector(("url",), dict, _JDBC_KEYS, _read_jdbc, _write_jdbc),
     **{

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_open_source_spark.plans.connections import step_connector
 from etl_open_source_spark.plans.models import PipelineSpec, Step, StepType
 from etl_open_source_spark.plans.sanitize import sanitize_nulls
+from etl_open_source_spark.sources.writers import write_files
 
 # createOrReplaceTempView("input") is session-global; overlapping
 # scheduler threads must not swap each other's dataset between view
@@ -61,9 +62,8 @@ class PipelineRunner:
         if not self.history_path:
             return
         row = [(run_id, task_id, started_at, finished_at, status, message)]
-        self.spark.createDataFrame(row, HISTORY_SCHEMA).write.mode("append").parquet(
-            self.history_path
-        )
+        write_files(self.spark.createDataFrame(row, HISTORY_SCHEMA), self.history_path,
+                    "parquet", "append")
 
     def history(self) -> DataFrame:
         return self.spark.read.parquet(self.history_path)

@@ -289,15 +289,15 @@ def q_agg_groupingsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing on non-empty input (every grouping-set row covers >= 1
     source row) - pinned by tests/test_empty_input.py.
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("gs_orders")
     return spark.sql(
         f"""
 SELECT o_orderstatus, o_orderpriority,
 {_ROLLUP_AGGS_SQL}
-FROM gs_orders
+FROM {{orders}}
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 ORDER BY g_status, g_priority, o_orderstatus, o_orderpriority
-"""
+""",
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -22,7 +22,7 @@ from etl_open_source_spark.plans.sanitize import sanitize_nulls
 from etl_open_source_spark.queries.scans import _tmp  # shared sf-scoped temp dirs
 from etl_open_source_spark.registry import query
 from etl_open_source_spark.sources.readers import read_parquet
-from etl_open_source_spark.sources.writers import write_parquet
+from etl_open_source_spark.sources.writers import write_files
 
 
 
@@ -191,8 +191,8 @@ def q_sink_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_totalprice")
     )
     path = _tmp(sf_dir, "append_sink")
-    write_parquet(src, path, mode="replace")
-    write_parquet(src, path, mode="append")
+    write_files(src, path, "parquet", "replace")
+    write_files(src, path, "parquet", "append")
     return read_parquet(spark, path)
 
 
@@ -211,8 +211,8 @@ def q_sink_replace(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_totalprice")
     )
     path = _tmp(sf_dir, "replace_sink")
-    write_parquet(src, path, mode="replace")
-    write_parquet(src, path, mode="replace")
+    write_files(src, path, "parquet", "replace")
+    write_files(src, path, "parquet", "replace")
     return read_parquet(spark, path)
 
 
@@ -254,7 +254,7 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merged = merge_upsert(o, updates, ["o_orderkey"])
     path = _tmp(sf_dir, "merge_sink")
-    write_parquet(merged, path, mode="replace")
+    write_files(merged, path, "parquet", "replace")
     return read_parquet(spark, path)
 
 
@@ -263,28 +263,33 @@ SELECT c.c_mktsegment,
        n.n_name,
        COUNT(*) AS order_cnt,
        {sql_dsum('o.o_totalprice')} AS revenue
-FROM orders o
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
+FROM {{orders}} o
+JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+JOIN {{nation}} n ON c.c_nationkey = n.n_nationkey
 WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
 GROUP BY c.c_mktsegment, n.n_name
 ORDER BY revenue DESC, c.c_mktsegment, n.n_name
 LIMIT 20
 """
 
+# The engine binds each {table} to a DataFrame (spark.sql kwargs); the
+# oracle reads the same text over its tables of those names.
+_PUSHDOWN_TABLES = ("orders", "customer", "nation")
+_PUSHDOWN_TEXT = _PUSHDOWN_SQL.format(**{t: t for t in _PUSHDOWN_TABLES})
+
 # Oracle twin: identical except the decimal fold carries the ISFINITE
 # guard (NaN-axis r11). The ENGINE string stays pure ANSI — Spark's
 # ANSI cast already NULLs non-finite by mechanism, so a per-row guard
 # there would only re-buy existing semantics at bench cost (measured
 # ~1.2x on this query when the guard rode along in the engine SQL).
-_PUSHDOWN_ORACLE = _PUSHDOWN_SQL.replace(
+_PUSHDOWN_ORACLE = _PUSHDOWN_TEXT.replace(
     sql_dsum("o.o_totalprice"), sql_dsum_finite("o.o_totalprice")
 )
 # The replace must actually have fired: if _PUSHDOWN_SQL is ever edited so
 # the sql_dsum fragment no longer matches byte-for-byte, a silent no-op
 # here would drop the oracle's ISFINITE guard and reintroduce the DuckDB
 # non-finite decimal-cast crash (ADVICE r11).
-assert _PUSHDOWN_ORACLE != _PUSHDOWN_SQL, (
+assert _PUSHDOWN_ORACLE != _PUSHDOWN_TEXT, (
     "q_sql_transform oracle twin: sql_dsum fragment not found in "
     "_PUSHDOWN_SQL — the ISFINITE substitution silently no-opped"
 )
@@ -295,9 +300,11 @@ def q_sql_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary-SQL execution — THE reference capability (a user SQL string
     pushed to the source DBMS, core/extractors/sqlserver.py:46-55, and the
     stubbed sql_transformer). Here the engine itself evaluates the same
-    ANSI SQL via Spark SQL over the registered catalog. (The DuckDB
+    ANSI SQL via Spark SQL over the three tables it reads, bound as
+    DataFrames for the call (no session views). (The DuckDB
     oracle twin differs only by an ISFINITE guard inside the decimal
     fold — DuckDB's integer-backed cast hard-errors on non-finite where
     Spark's ANSI cast NULLs them by mechanism; NaN-axis r11.)"""
-    register_views(spark, sf_dir)
-    return spark.sql(_PUSHDOWN_SQL)
+    return spark.sql(
+        _PUSHDOWN_SQL, **{t: load_table(spark, sf_dir, t) for t in _PUSHDOWN_TABLES}
+    )

@@ -24,6 +24,7 @@ from etl_open_source_spark.operators.maintenance import (
 from etl_open_source_spark.operators.sampling import det_hash, sql_det_hash
 from etl_open_source_spark.queries.scans import _tmp  # shared sf-scoped temp dirs
 from etl_open_source_spark.registry import query
+from etl_open_source_spark.sources.writers import write_files
 
 
 @query(
@@ -234,7 +235,7 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
-    src.repartition(64).write.mode("overwrite").parquet(small_dir)
+    write_files(src.repartition(64), small_dir, "parquet", "replace")
     n_small = sum(1 for f in os.listdir(small_dir) if f.endswith(".parquet"))
     n_out = compact_parquet(spark, small_dir, compact_dir, num_files=4)
     back = spark.read.parquet(compact_dir)
@@ -339,22 +340,18 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exit (it holds a full orders copy per invocation)
     from etl_open_source_spark.catalog import scratch_dir
 
-    from etl_open_source_spark.sources.writers import write_parquet
-
-    # the engine writer is the spec layer's primitive — using it here
+    # write_files is the spec layer's load primitive — using it here
     # also applies the documented Hive-layout contract: '' partition
     # values canonicalize to NULL (a Hive directory layout cannot
     # represent an empty-string partition; the oracle mirrors NULLIF)
     dest = scratch_dir("etl_orders_backfill_")
     src = load_table(spark, sf_dir, "orders")
-    write_parquet(src, dest, mode="replace", partition_by=["o_orderstatus"])
+    write_files(src, dest, "parquet", "replace", partition_by=["o_orderstatus"])
     fixed = src.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice",
         (F.col("o_totalprice").cast("decimal(18,4)") * 2).cast("double"),
     )
-    write_parquet(
-        fixed, dest, mode="overwrite_partitions", partition_by=["o_orderstatus"]
-    )
+    write_files(fixed, dest, "parquet", "overwrite_partitions", partition_by=["o_orderstatus"])
     # explicit schema on the read-back: an EMPTY source writes no
     # partition directories at all, and schema inference on the bare
     # dest dir raises UNABLE_TO_INFER_SCHEMA where the schema-carrying

@@ -151,14 +151,14 @@ def q_filter_not_in_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     list the predicate is FALSE for matches and NULL (never TRUE)
     otherwise — the classic SQL footgun. Both engines must produce the
     identical FALSE/NULL pattern."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("ni_customer")
     return spark.sql(
         """
         SELECT c_custkey, c_mktsegment,
                c_mktsegment NOT IN ('BUILDING', NULL) AS not_in_with_null,
                c_mktsegment NOT IN ('BUILDING', 'MACHINERY') AS not_in_plain
-        FROM ni_customer
-        """
+        FROM {customer}
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -178,16 +178,16 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery (orders above 2x their customer's
     average) — Catalyst decorrelates it into an aggregate + join rather
     than re-running the subquery per row."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("corr_orders")
     return spark.sql(
         """
         SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-        FROM corr_orders o
+        FROM {orders} o
         WHERE o.o_totalprice > 2 * (
           SELECT CAST(SUM(CAST(o2.o_totalprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-          FROM corr_orders o2 WHERE o2.o_custkey = o.o_custkey
+          FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey
         )
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -422,11 +422,10 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     one distributed step; contrast the driver loop in
     operators/dedup.py connected_components (which adds a convergence
     check + lineage truncation the SQL form can't express)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql("""
       WITH RECURSIVE chain AS (
         SELECT o_orderkey AS start_key, o_orderkey AS cur, 0 AS depth
-        FROM orders WHERE o_orderkey <= 500
+        FROM {orders} WHERE o_orderkey <= 500
         UNION ALL
         SELECT start_key, cur DIV 2, depth + 1 FROM chain WHERE cur > 1
       )
@@ -434,7 +433,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(MAX(depth) AS BIGINT) AS chain_len,
              CAST(SUM(cur) AS BIGINT) AS chain_sum
       FROM chain GROUP BY start_key
-    """)
+    """, orders=load_table(spark, sf_dir, "orders"))
 
 
 @query(

@@ -115,16 +115,16 @@ WHERE c_acctbal > (SELECT CAST(SUM(CAST(CASE WHEN ISFINITE(c_acctbal) THEN c_acc
 def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery in a predicate (customers above average balance) —
     Catalyst plans the subquery once and broadcasts the scalar."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sq_customer")
     return spark.sql(
         """
         SELECT c_custkey, c_name, c_acctbal
-        FROM sq_customer
+        FROM {customer}
         WHERE c_acctbal > (
           SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*)
-          FROM sq_customer
+          FROM {customer}
         )
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

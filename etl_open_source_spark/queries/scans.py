@@ -24,18 +24,8 @@ from pyspark.sql import functions as F
 
 from etl_open_source_spark.catalog import cleanup_at_exit, load_table, scratch_dir
 from etl_open_source_spark.registry import query
-from etl_open_source_spark.sources.readers import (
-    read_csv,
-    read_json,
-    read_orc,
-    read_parquet,
-)
-from etl_open_source_spark.sources.writers import (
-    write_csv,
-    write_json,
-    write_orc,
-    write_parquet,
-)
+from etl_open_source_spark.sources.readers import read_files, read_parquet
+from etl_open_source_spark.sources.writers import write_files
 
 _TMP_ROOT = os.path.join(tempfile.gettempdir(), "etl_open_source_spark_io")
 
@@ -78,9 +68,9 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["l_orderkey", "l_linenumber", "l_returnflag", "l_quantity", "l_extendedprice"]
     src = load_table(spark, sf_dir, "lineitem").select(*cols)
     path = _tmp(sf_dir, "lineitem_csv")
-    write_csv(src, path, mode="replace")
+    write_files(src, path, "csv", "replace")
     schema = "l_orderkey bigint, l_linenumber int, l_returnflag string, l_quantity double, l_extendedprice double"
-    return read_csv(spark, path, schema=schema, dialect="engine")
+    return read_files(spark, path, "csv", schema, dialect="engine")
 
 
 @query(
@@ -93,9 +83,9 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["event_id", "user_id", "event_type", "value", "props"]
     src = load_table(spark, sf_dir, "events").select(*cols)
     path = _tmp(sf_dir, "events_json")
-    write_json(src, path, mode="replace")
+    write_files(src, path, "json", "replace")
     schema = "event_id bigint, user_id bigint, event_type string, value double, props string"
-    return read_json(spark, path, schema=schema)
+    return read_files(spark, path, "json", schema, dialect="engine")
 
 
 @query(
@@ -125,7 +115,7 @@ def q_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/writers.py) and the oracle mirrors with NULLIF."""
     src = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 100000)
     path = _tmp(sf_dir, "orders_sink")
-    write_parquet(src, path, mode="replace", partition_by=["o_orderstatus"])
+    write_files(src, path, "parquet", "replace", partition_by=["o_orderstatus"])
     back = read_parquet(spark, path, schema=src.schema)
     return (
         back.groupBy("o_orderstatus")
@@ -144,16 +134,17 @@ WHERE c_acctbal > 0
     tags=("sink",),
 )
 def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CSV loader round-trip: engine write_csv → read_csv with explicit
-    schema. Covers the reference's declared-but-stubbed CSV loader
-    (reference core/loaders/csv.py, 0-byte; dispatch commented at
-    core/engine.py:175-188). Lossless: int/string/double columns only."""
+    """CSV loader round-trip: write_files → read_files in the engine
+    dialect with an explicit schema. Covers the reference's
+    declared-but-stubbed CSV loader (reference core/loaders/csv.py,
+    0-byte; dispatch commented at core/engine.py:175-188). Lossless:
+    int/string/double columns only."""
     cols = ["c_custkey", "c_name", "c_nationkey", "c_acctbal"]
     src = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0).select(*cols)
     path = _tmp(sf_dir, "customer_csv_sink")
-    write_csv(src, path, mode="replace")
+    write_files(src, path, "csv", "replace")
     schema = "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double"
-    return read_csv(spark, path, schema=schema, dialect="engine")
+    return read_files(spark, path, "csv", schema, dialect="engine")
 
 
 @query(
@@ -187,8 +178,8 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_returnflag", "l_linestatus", "l_quantity")
     )
     path = _tmp(sf_dir, "lineitem_orc_sink")
-    write_orc(src, path, mode="replace", partition_by=["l_returnflag"])
-    back = read_orc(spark, path, schema=src.schema)
+    write_files(src, path, "orc", "replace", partition_by=["l_returnflag"])
+    back = read_files(spark, path, "orc", src.schema, dialect="engine")
     return (
         back.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -262,7 +253,7 @@ def q_scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     PartitionFilters pin is unaffected."""
     src = load_table(spark, sf_dir, "orders")
     path = _tmp(sf_dir, "orders_part_pruned")
-    write_parquet(src, path, mode="replace", partition_by=["o_orderstatus"])
+    write_files(src, path, "parquet", "replace", partition_by=["o_orderstatus"])
     back = read_parquet(spark, path, schema=src.schema)
     return (
         back.filter(F.col("o_orderstatus") == "F")
@@ -310,9 +301,10 @@ def q_sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type"
     )
     path = _tmp(sf_dir, "events_json_sink")
-    write_json(src, path, mode="replace")
-    back = read_json(
-        spark, path, schema="event_id bigint, user_id bigint, event_type string"
+    write_files(src, path, "json", "replace")
+    back = read_files(
+        spark, path, "json", "event_id bigint, user_id bigint, event_type string",
+        dialect="engine",
     )
     return (
         back.groupBy("event_type")
@@ -347,12 +339,12 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHOUT mergeSchema; this query exercises the evolution mechanics."""
     o = load_table(spark, sf_dir, "orders")
     path = _tmp(sf_dir, "orders_evolving")
-    o.filter(F.col("o_orderkey") % 2 == 0).select(
-        "o_orderkey", "o_totalprice"
-    ).write.mode("overwrite").parquet(path)
-    o.filter(F.col("o_orderkey") % 2 == 1).select(
+    even = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_totalprice")
+    odd = o.filter(F.col("o_orderkey") % 2 == 1).select(
         "o_orderkey", "o_totalprice", F.col("o_orderpriority").alias("priority")
-    ).write.mode("append").parquet(path)
+    )
+    write_files(even, path, "parquet", "replace")
+    write_files(odd, path, "parquet", "append")
     return spark.read.option("mergeSchema", "true").parquet(path).select(
         "o_orderkey", "o_totalprice", "priority"
     )
@@ -400,11 +392,9 @@ def q_scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _tmp(sf_dir, "orders_feed_csv")
     lines.coalesce(4).write.mode("overwrite").text(path)
-    back = (
-        spark.read.schema("o_orderkey bigint, o_totalprice double, _corrupt string")
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt")
-        .csv(path)
+    back = read_files(
+        spark, path, "csv", "o_orderkey bigint, o_totalprice double, _corrupt string",
+        header="false", mode="PERMISSIVE", columnNameOfCorruptRecord="_corrupt",
     )
     return back.agg(
         F.count(F.when(F.col("_corrupt").isNull(), 1)).alias("n_good"),
@@ -442,24 +432,18 @@ def q_sink_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     every c_mktsegment value ('' , NULL, whitespace-padded, <&>-bearing)
     passes THROUGH the serializer. XML writes '' as ``<t></t>`` and
     omits NULL elements, so ''-vs-NULL survives; but the read back MUST
-    set ignoreSurroundingSpaces=false (read_xml engine dialect) — Spark's
+    use the engine dialect, which reads element text untrimmed — Spark's
     trimming default mutates ``' lead'`` → ``'lead'`` and collapses
     all-whitespace values to '', which the randomized differential
     catches the moment the pool contains a padded value."""
-    from etl_open_source_spark.sources.readers import read_xml
-    from etl_open_source_spark.sources.writers import write_xml
-
     src = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment"
     )
     path = _tmp(sf_dir, "customer_xml_sink")
-    write_xml(src, path, mode="replace", row_tag="customer")
-    back = read_xml(
-        spark,
-        path,
-        schema="c_custkey bigint, c_nationkey int, c_mktsegment string",
-        row_tag="customer",
-        ignore_surrounding_spaces=False,
+    write_files(src, path, "xml", "replace", rowTag="customer")
+    back = read_files(
+        spark, path, "xml", "c_custkey bigint, c_nationkey int, c_mktsegment string",
+        dialect="engine", rowTag="customer",
     )
     return (
         back.groupBy("c_mktsegment")

@@ -160,10 +160,10 @@ def q_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (part,)
 
     spark.udtf.register("split_parts", SplitParts)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("udtf_orders")
     return spark.sql(
         """
         SELECT o.o_orderkey, s.part
-        FROM udtf_orders o, LATERAL split_parts(o.o_orderpriority) s
-        """
+        FROM {orders} o, LATERAL split_parts(o.o_orderpriority) s
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )

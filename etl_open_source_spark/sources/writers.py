@@ -2,22 +2,16 @@
 
 Replaces the reference's loaders (the row-at-a-time SQL Server insert loop at
 core/loaders/sqlserver.py:271-286 plus the stubbed postgres/mysql/csv
-loaders): distributed `df.write` with proper modes.
-
-Mode parity (core/loaders/sqlserver.py:244-269):
-- append  → `mode("append")`
-- replace → `mode("overwrite")`; for JDBC add ``option("truncate","true")``
-  to match the reference's DELETE-rows-keep-DDL semantics.
+loaders): distributed `df.write`, one file writer over the format table in
+sources/formats.py, and batched JDBC writes. Load modes map to Spark save
+modes in one place, ``formats.spark_mode``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-VALID_MODES = {"append", "replace", "overwrite_partitions"}
-# non-parquet sinks: dynamic partition overwrite is a partitioned-layout
-# concept — only the parquet writer accepts the third mode
-VALID_BASIC_MODES = {"append", "replace"}
+from etl_open_source_spark.sources.formats import BASIC_MODES, file_format, spark_mode
 
 
 def _canonicalize_partition_keys(df: DataFrame, partition_by: list[str]) -> DataFrame:
@@ -39,94 +33,39 @@ def _canonicalize_partition_keys(df: DataFrame, partition_by: list[str]) -> Data
     return df
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "append", partition_by: list[str] | None = None) -> None:
-    """``overwrite_partitions`` = overwrite mode with per-write
-    ``partitionOverwriteMode=dynamic``: ONLY the partitions present in
-    ``df`` are replaced — the idempotent daily-backfill semantics
-    (q_sink_partition_overwrite pins the behavior; plain ``replace``
-    would truncate the whole table). Requires ``partition_by``."""
-    if mode not in VALID_MODES:
-        raise ValueError(f"mode must be one of {VALID_MODES}, got {mode!r}")
-    if mode == "overwrite_partitions":
-        if not partition_by:
-            raise ValueError(
-                "mode 'overwrite_partitions' requires partition_by — without "
-                "partitions, dynamic overwrite degenerates to a full truncate"
-            )
-        (
-            _canonicalize_partition_keys(df, partition_by)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-        return
-    if partition_by:
-        df = _canonicalize_partition_keys(df, partition_by)
-    writer = df.write.mode("overwrite" if mode == "replace" else "append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_csv(
+def write_files(
     df: DataFrame,
     path: str,
-    mode: str = "replace",
-    header: bool = True,
-    null_value: str = "\\N",
+    fmt: str,
+    mode: str,
+    partition_by: list[str] | None = None,
+    **options: str,
 ) -> None:
-    """CSV dialect: NULL is written as ``\\N`` (the Hive/MySQL dump
-    convention) and empty string as ``""`` — Spark's default writes BOTH
-    as an empty field, so ``''`` silently becomes NULL on read-back
-    (randomized IO differential catch). ``read_csv`` defaults to the
-    same token, making the engine round trip lossless; pass
-    ``null_value=""`` to emit the lossy bare-empty dialect for foreign
-    consumers that require it."""
-    if mode not in VALID_BASIC_MODES:
-        raise ValueError(f"mode must be one of {VALID_BASIC_MODES}, got {mode!r}")
-    (
-        df.write.mode("overwrite" if mode == "replace" else "append")
-        .option("header", str(header).lower())
-        .option("nullValue", null_value)
-        .csv(path)
-    )
+    """Write ``df`` as ``fmt`` files with the format's engine options
+    (``options`` override them). ``partition_by`` lays out Hive-style
+    directories, for the formats that take it.
 
-
-def write_json(df: DataFrame, path: str, mode: str = "replace") -> None:
-    if mode not in VALID_BASIC_MODES:
-        raise ValueError(f"mode must be one of {VALID_BASIC_MODES}, got {mode!r}")
-    df.write.mode("overwrite" if mode == "replace" else "append").json(path)
-
-
-def write_orc(
-    df: DataFrame, path: str, mode: str = "append", partition_by: list[str] | None = None
-) -> None:
-    """ORC sink — Spark-native columnar alternative to parquet (same
-    pushdown/pruning story); rounds out the reference's stubbed loader
-    matrix (core/loaders/*.py, all 0-byte)."""
-    if mode not in VALID_BASIC_MODES:
-        raise ValueError(f"mode must be one of {VALID_BASIC_MODES}, got {mode!r}")
+    ``overwrite_partitions`` replaces ONLY the partitions present in
+    ``df`` — the idempotent daily-backfill semantics
+    (q_sink_partition_overwrite pins the behavior; plain ``replace``
+    would truncate the whole table). Requires ``partition_by``."""
+    spec = file_format(fmt)
+    writer_mode = spark_mode(mode, spec.modes)
+    if mode == "overwrite_partitions" and not partition_by:
+        raise ValueError(
+            "mode 'overwrite_partitions' requires partition_by — without "
+            "partitions, dynamic overwrite degenerates to a full truncate"
+        )
     if partition_by:
+        if not spec.partitioned:
+            raise ValueError(f"{fmt} files take no partition_by")
         df = _canonicalize_partition_keys(df, partition_by)
-    writer = df.write.mode("overwrite" if mode == "replace" else "append")
+    writer = df.write.mode(writer_mode).options(**{**spec.write, **options})
+    if mode == "overwrite_partitions":
+        writer = writer.option("partitionOverwriteMode", "dynamic")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def write_xml(df: DataFrame, path: str, mode: str = "replace", row_tag: str = "row") -> None:
-    """XML sink — built into Spark core since 4.0 (SPARK-44265 merged the
-    external spark-xml connector), so no extra jar. Row-per-element;
-    splittable on read via the StAX record reader."""
-    if mode not in VALID_BASIC_MODES:
-        raise ValueError(f"mode must be one of {VALID_BASIC_MODES}, got {mode!r}")
-    (
-        df.write.mode("overwrite" if mode == "replace" else "append")
-        .option("rowTag", row_tag)
-        .format("xml")
-        .save(path)
-    )
+    writer.format(fmt).save(path)
 
 
 def jdbc_write_options(
@@ -139,16 +78,14 @@ def jdbc_write_options(
 ) -> tuple[str, dict[str, str]]:
     """Options for a batched JDBC write — replaces the reference's one
     INSERT round-trip per row (core/loaders/sqlserver.py:282-286) with
-    executor-parallel batched inserts. Returns (spark_mode, options).
+    executor-parallel batched inserts. Returns (Spark save mode, options).
 
     ``column_types`` maps columns to target DDL types for auto
     CREATE TABLE — the reference's ensure_table_exists / DDL-generation
     path (core/loaders/sqlserver.py:83-239, e.g. preserving varchar(n) and
     decimal(p,s) from a source schema) expressed as Spark's
     ``createTableColumnTypes`` option."""
-    if mode not in VALID_BASIC_MODES:
-        raise ValueError(f"mode must be one of {VALID_BASIC_MODES}, got {mode!r}")
-    spark_mode = "append" if mode == "append" else "overwrite"
+    save_mode = spark_mode(mode, BASIC_MODES)
     opts = {"url": url, "dbtable": table, "batchsize": str(batchsize)}
     if mode == "replace":
         # DELETE-not-DROP parity: truncate preserves the target's DDL.
@@ -158,7 +95,7 @@ def jdbc_write_options(
             f"{c} {t}" for c, t in column_types.items()
         )
     opts.update(extra)
-    return spark_mode, opts
+    return save_mode, opts
 
 
 # pandas-dtype → SQL DDL fallback map — parity with the reference's
@@ -197,5 +134,5 @@ def write_jdbc(df: DataFrame, **kwargs) -> None:
     only the URL/driver options differ (``dialect_jdbc_options``). This is
     the distributed replacement for the reference's one-INSERT-per-row
     loop (core/loaders/sqlserver.py:282-286)."""
-    spark_mode, opts = jdbc_write_options(**kwargs)
-    df.write.format("jdbc").options(**opts).mode(spark_mode).save()
+    save_mode, opts = jdbc_write_options(**kwargs)
+    df.write.format("jdbc").options(**opts).mode(save_mode).save()

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_open_source_spark.sources.writers import write_files
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -148,7 +150,7 @@ def foreach_batch_upsert_sink(
             # caller promises one row per key)
             merged = merge_upsert(target, batch, keys, dedup_order=dedup_order)
         # materialize before overwriting the path being read
-        merged.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
+        write_files(merged.localCheckpoint(eager=True), target_path, "parquet", "replace")
 
     return (
         stream.writeStream.foreachBatch(upsert)
@@ -274,7 +276,7 @@ def foreach_batch_incremental_mv(
                 )
             )
         # materialize before overwriting the path being read
-        partial.localCheckpoint(eager=True).write.mode("overwrite").parquet(target_path)
+        write_files(partial.localCheckpoint(eager=True), target_path, "parquet", "replace")
 
     return (
         stream.writeStream.foreachBatch(fold)

@@ -94,11 +94,11 @@ def test_hive_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
     partition column must surface as a PartitionFilter (directory pruning
     — zero IO for other partitions), not a data-row filter."""
     from etl_open_source_spark.catalog import load_table
-    from etl_open_source_spark.sources.writers import write_parquet
+    from etl_open_source_spark.sources.writers import write_files
 
     e = load_table(spark, sf_dir, "events")
     out = str(tmp_path / "by_type")
-    write_parquet(e, out, mode="replace", partition_by=["event_type"])
+    write_files(e, out, "parquet", "replace", partition_by=["event_type"])
     back = spark.read.parquet(out).filter("event_type = 'purchase'")
     plan = back._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")

@@ -494,18 +494,18 @@ def test_load_mode_overwrite_partitions(spark, tmp_path):
     import pandas as pd
 
     from etl_open_source_spark.plans.validation import validate_spec
-    from etl_open_source_spark.sources.writers import write_parquet
+    from etl_open_source_spark.sources.writers import write_files
 
     dest = str(tmp_path / "orders_by_status")
     src = spark.createDataFrame(
         [(1, "F", 10.0), (2, "F", 20.0), (3, "O", 30.0), (4, "P", 40.0)],
         "id bigint, status string, price double",
     )
-    write_parquet(src, dest, mode="replace", partition_by=["status"])
+    write_files(src, dest, "parquet", "replace", partition_by=["status"])
     fix = spark.createDataFrame(
         [(1, "F", 99.0)], "id bigint, status string, price double"
     )
-    write_parquet(fix, dest, mode="overwrite_partitions", partition_by=["status"])
+    write_files(fix, dest, "parquet", "overwrite_partitions", partition_by=["status"])
     back = spark.read.parquet(dest).toPandas().sort_values("id").reset_index(drop=True)
     assert list(back["id"]) == [1, 3, 4]           # F fully replaced by 1 row
     assert back.loc[0, "price"] == 99.0            # corrected value
@@ -514,7 +514,7 @@ def test_load_mode_overwrite_partitions(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="requires partition_by"):
-        write_parquet(fix, dest, mode="overwrite_partitions")
+        write_files(fix, dest, "parquet", "overwrite_partitions")
 
     spec = PipelineSpec(
         id="p", name="p", cron="* * * * *", enabled=True,
@@ -535,7 +535,7 @@ def test_overwrite_partitions_non_parquet_rejected_at_validate():
     """A csv load step declaring mode 'overwrite_partitions' must fail at
     validate time (only the parquet writer implements dynamic overwrite;
     before this check the spec validated clean and died mid-pipeline in
-    write_csv — self-review finding)."""
+    the csv writer — self-review finding)."""
     from etl_open_source_spark.plans.validation import validate_spec
 
     spec = PipelineSpec(
