@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_open_source_spark.operators.dedup import shingle_positions, word_shingles
+from etl_open_source_spark.operators.dedup import shingle_positions
 from etl_open_source_spark.operators.sampling import det_hash
 
 
@@ -41,9 +41,9 @@ def decontaminate_hits(
     scan + map-side hash probe, no shuffle of corpus rows; the per-doc
     count aggregates on the corpus doc id (one map-side-combinable
     shuffle of hit rows only, which are rare)."""
-    c_sh = word_shingles(corpus, id_col, text_col, n=n)
+    c_sh = shingle_positions(corpus, id_col, text_col, n)
     b_sh = (
-        word_shingles(benchmark, id_col, text_col, n=n)
+        shingle_positions(benchmark, id_col, text_col, n)
         .withColumnRenamed("id", "bench_id")
     )
     hits = c_sh.join(F.broadcast(b_sh), "shingle")
@@ -78,8 +78,6 @@ def dup_ngram_fraction(
     forced broadcast OOMs the executors where AQE instead degrades
     gracefully to a shuffled semi join on the already-partitioned
     shingle hash."""
-    from etl_open_source_spark.operators.dedup import shingle_positions
-
     pos = shingle_positions(df, id_col, text_col, n, distinct=False)
     freq = (
         pos.select("id", "shingle")

@@ -76,7 +76,7 @@ def _with_words(df: DataFrame, text_col: str) -> DataFrame:
 
 def word_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Per-doc DISTINCT shingle sets as (id, shingles: array<long>) — the
-    scan-local (zero-exchange) form of ``word_shingles``: sizes become
+    scan-local (zero-exchange) form of ``shingle_positions``: sizes become
     ``size(shingles)``, exact intersections become ``array_intersect``.
     Every set-join consumer builds on this (via ``_doc_sets``, capped or
     not) and skips the explode + groupBy round-trip entirely (r12).
@@ -98,10 +98,15 @@ def shingle_positions(
     df: DataFrame, id_col: str, text_col: str, n: int, distinct: bool = True
 ) -> DataFrame:
     """(id, shingle) rows over 64-bit-hashed word n-grams — the exploded
-    (inverted-index) view of :func:`_shingle_expr`.
+    (inverted-index) view of :func:`_shingle_expr`. The shingle is an
+    xxhash64 of its n words: the n-gram string is never built, and every
+    downstream join/groupBy keys on an 8-byte long. Collisions merge two
+    distinct n-grams with p ≈ |shingles|²/2⁶⁵ (≈1e-9 at 10⁵ shingles) —
+    the standard trade in shingle-based dedup.
 
     ``distinct=True`` dedupes within-doc (set semantics); ``False`` keeps
-    every position.
+    every position. The posting-list skew guard (``max_doc_freq``) lives
+    on the set-join input, :func:`_doc_sets`, not here.
 
     The explode lives in the SAME projection as the words column (no
     intermediate array-column select): with an extra projection boundary,
@@ -116,20 +121,6 @@ def shingle_positions(
             F.explode(_shingle_expr(n, distinct)).alias("shingle"),
         )
     )
-
-
-def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles: (id, shingle) with the shingle as a
-    64-bit xxhash64 of its n words — the n-gram string is never built
-    (no concat allocations) and every downstream join/groupBy keys on an
-    8-byte long instead of a ~20-byte string. Collisions merge two
-    distinct n-grams with p ≈ |shingles|²/2⁶⁵ (≈1e-9 at 10⁵ shingles;
-    ~ppb error in intersection counts at 10¹² — the standard trade in
-    shingle-based dedup, and what MinHash does anyway).
-
-    The posting-list skew guard (``max_doc_freq``) lives on the set-join
-    input, :func:`_doc_sets`, not here."""
-    return shingle_positions(df, id_col, text_col, n, distinct=True)
 
 
 # ------------------------------------------------- exact n-gram Jaccard
@@ -237,7 +228,7 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 64) -> DataFrame:
     affine transforms (the standard MinHash trick; 64 independent string
     hashes would cost 64× the CPU). One shuffle; signature size constant
     regardless of doc length. Shingles arrive already 64-bit-hashed from
-    word_shingles, so the base value is just a fold into [0, p)."""
+    shingle_positions, so the base value is just a fold into [0, p)."""
     p = _MERSENNE_31
     # fold once per row into a column — 64 agg exprs each re-folding
     # would not be CSE'd across aggregates

@@ -89,7 +89,8 @@ def sample_uniform(df: DataFrame, keys: list[str], fraction: float) -> DataFrame
     """Deterministic Bernoulli sample: keep a row iff its key hashes into
     the first ``fraction`` of 10,000 buckets. Scan-local — no shuffle."""
     _require_integer_keys(df, keys)
-    return df.filter(F.pmod(det_hash(*keys), F.lit(10_000)) < int(fraction * 10_000))
+    # round, don't truncate: int(0.57 * 10_000) is 5699 (cf. cluster_safe_split)
+    return df.filter(F.pmod(det_hash(*keys), F.lit(10_000)) < round(fraction * 10_000))
 
 
 def sample_weighted(df: DataFrame, keys: list[str], weight: Column) -> DataFrame:

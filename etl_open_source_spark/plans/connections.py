@@ -34,6 +34,7 @@ class Connector:
     read: Reader
     write: Writer | None  # None: extract-only
     modes: frozenset[str] = BASIC_MODES  # load modes
+    partitioned: bool = False  # a load takes partition_by (sources/formats.py)
 
     def missing(self, params: dict) -> list[str]:
         return [k for k in self.params if not params.get(k)]
@@ -62,11 +63,10 @@ def _file(fmt: str) -> Connector:
     def load(data: DataFrame, conn: ConnectionConfig, cfg: dict) -> None:
         if cfg.get("repartition"):
             data = data.repartition(int(cfg["repartition"]))
-        # partition_by only where the format takes it; csv/json loads ignore it
-        W.write_files(data, cfg["path"], fmt, cfg.get("mode", "append"),
-                      cfg.get("partition_by") if spec.partitioned else None)
+        W.write_files(data, cfg["path"], fmt, cfg.get("mode", "append"), cfg.get("partition_by"))
 
-    return Connector((), None, ("query", "table", "path"), extract, load, spec.modes)
+    return Connector((), None, ("query", "table", "path"), extract, load, spec.modes,
+                     spec.partitioned)
 
 
 def _dialect_options(dialect: str, params: dict) -> dict[str, str]:

@@ -97,6 +97,11 @@ def _io_issues(spec: PipelineSpec, s: Step) -> list[str]:
                 f"load step {s.name!r} uses mode {mode!r} but format {conn.type!r} "
                 f"does not support it"
             )
+        if cfg.get("partition_by") and not entry.partitioned:
+            issues.append(
+                f"load step {s.name!r} has 'partition_by' but {conn.type!r} "
+                f"does not take it"
+            )
     if mode == "overwrite_partitions" and not cfg.get("partition_by"):
         # without partition_by, dynamic overwrite degenerates to a full
         # truncate — the exact data-loss the mode exists to prevent

@@ -441,7 +441,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(F.split(T.ascii_fold("text"), " "))).cast("bigint").alias("sum_tokens"),
+            F.sum(F.size(T.words_col("text"))).cast("bigint").alias("sum_tokens"),
             F.sum(F.length("text")).cast("bigint").alias("sum_chars"),
             (F.sum(F.length("text")).cast("double") / F.count(F.lit(1))).alias("avg_chars"),
         )
@@ -465,7 +465,7 @@ def q_text_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     word count)."""
     d = load_table(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(F.split(T.ascii_fold("text"), " ")).alias("term"))
+        d.select(F.explode(T.words_col("text")).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("term"))

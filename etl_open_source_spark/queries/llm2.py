@@ -252,7 +252,7 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic."""
     d = load_table(spark, sf_dir, "documents")
     terms = d.select(
-        "doc_id", F.explode(F.split(T.ascii_fold("text"), " ")).alias("term")
+        "doc_id", F.explode(T.words_col("text")).alias("term")
     )
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = terms.groupBy("term").agg(

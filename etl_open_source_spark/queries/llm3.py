@@ -50,7 +50,7 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark-doc counts. The corpus side is never shuffled — scan +
     broadcast hash probe + hit-only aggregate. Engine keys shingles by
     xxhash64, the oracle by string (collision p ≈ 1e-9, see
-    operators/dedup.py word_shingles)."""
+    operators/dedup.py shingle_positions)."""
     d = load_table(spark, sf_dir, "documents")
     bench = d.filter(F.expr(_BENCH_PRED))
     corpus = d.filter(~F.expr(_BENCH_PRED))
@@ -465,7 +465,7 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     with sample_uniform."""
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
-        "doc_id", F.explode(F.split(T.ascii_fold("text"), " ")).alias("word")
+        "doc_id", F.explode(T.words_col("text")).alias("word")
     )
     freq = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("total"))

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from etl_open_source_spark.catalog import load_table
 from etl_open_source_spark.operators import curation as C
 from etl_open_source_spark.operators.sampling import sql_det_hash
-from etl_open_source_spark.operators.text import ascii_fold
+from etl_open_source_spark.operators.text import words_col
 from etl_open_source_spark.registry import query
 
 
@@ -114,7 +114,7 @@ def q_text_hashvec(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs x 64."""
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
-        "doc_id", F.explode(F.split(ascii_fold("text"), " ")).alias("word")
+        "doc_id", F.explode(words_col("text")).alias("word")
     )
     bucket = F.pmod(
         F.conv(F.substring(F.md5("word"), 1, 8), 16, 10).cast("bigint"), F.lit(64)

@@ -25,6 +25,7 @@ from etl_open_source_spark.operators.sampling import det_hash, sql_det_hash
 from etl_open_source_spark.queries.scans import _tmp  # shared sf-scoped temp dirs
 from etl_open_source_spark.registry import query
 from etl_open_source_spark.sources.writers import write_files
+from etl_open_source_spark.streaming.windows import merge_rollup_states, rollup_state
 
 
 @query(
@@ -267,38 +268,29 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is built as BASE (orders before 2000-01-01, the standing MV)
     plus DELTA (orders at/after — the new ingest batch), then the two
     partial-aggregate states merge: counts add, decimal sums add, avg is
-    re-derived from the merged state. The oracle is the FULL recompute —
-    hash-equality proves merge(base, delta) == recompute, the property
+    re-derived from the merged state. The streaming MV
+    (foreach_batch_incremental_mv) folds each micro-batch with the same
+    state helpers. The oracle is the FULL recompute — hash-equality
+    proves merge(base, delta) == recompute, the property
     that lets a 100 TB rollup absorb a daily batch by touching only the
     delta (map-side-combinable states, one dimension-sized merge; the
     corpus-sized base is never re-scanned)."""
     o = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("2000-01-01 00:00:00").cast("timestamp")
-
-    def partial(df: DataFrame) -> DataFrame:
-        return df.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,4)")).alias("sum_dec"),
-        )
-
+    keys = ["o_orderpriority"]
     # NULL order dates fail BOTH comparisons (NULL-falsy) and would drop
     # from the merge while the full-recompute oracle keeps them — route
     # them into the base partition explicitly
-    base = partial(o.filter((F.col("o_orderdate") < cutoff) | F.col("o_orderdate").isNull()))
-    delta = partial(o.filter(F.col("o_orderdate") >= cutoff))
-    merged = (
-        base.unionByName(delta)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.sum("n_orders").alias("n_orders"),
-            F.sum("sum_dec").alias("sum_dec"),
-        )
+    base = o.filter((F.col("o_orderdate") < cutoff) | F.col("o_orderdate").isNull())
+    delta = o.filter(F.col("o_orderdate") >= cutoff)
+    merged = merge_rollup_states(
+        rollup_state(base, keys, "o_totalprice"), rollup_state(delta, keys, "o_totalprice"), keys
     )
     return merged.select(
         "o_orderpriority",
-        "n_orders",
+        F.col("n").alias("n_orders"),
         F.col("sum_dec").cast("double").alias("sum_price"),
-        (F.col("sum_dec").cast("double") / F.col("n_orders")).alias("avg_price"),
+        (F.col("sum_dec").cast("double") / F.col("n")).alias("avg_price"),
     )
 
 

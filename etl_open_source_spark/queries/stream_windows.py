@@ -1,10 +1,14 @@
-"""Event-time windowing, batch-equivalent form (SURVEY.md §2.C "Streaming").
+"""Event-time windowing, batch twins of the streaming operators (SURVEY.md
+§2.C "Streaming").
 
-These run the same `window()` / `session_window()` expressions Structured
-Streaming uses, executed in batch so the DuckDB oracle can verify values.
-The true streaming path (file source, watermarks, late data, output modes)
-lives in etl_open_source_spark/streaming/ and is engine-tested in
-tests/test_streaming.py — the driver records those as rows-only.
+q_window_tumbling, q_window_session and q_stream_interval_join call the
+streaming operators themselves (streaming/windows.py) on a batch frame,
+so the DuckDB oracle checks the expressions the stream runs; on a batch
+frame Catalyst drops the watermark (EliminateEventTimeWatermark). The
+true streaming path (file source, watermarks, late data, output modes) is
+engine-tested in tests/test_streaming.py. q_stream_dedup stays a batch
+dropDuplicates: Spark rejects dropDuplicatesWithinWatermark on batch
+frames.
 """
 
 from __future__ import annotations
@@ -14,6 +18,11 @@ from pyspark.sql import functions as F
 
 from etl_open_source_spark.catalog import load_table
 from etl_open_source_spark.registry import query
+from etl_open_source_spark.streaming.windows import (
+    session_agg,
+    stream_stream_interval_join,
+    tumbling_agg,
+)
 
 
 @query(
@@ -32,24 +41,10 @@ ORDER BY window_start, event_type
     tags=("stream",),
 )
 def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed (tumbling) event-time windows — identical expression works on
-    readStream; epoch-aligned, so windows agree with time_bucket."""
+    """Fixed (tumbling) 1 h event-time windows: the streaming
+    :func:`tumbling_agg` over the events table."""
     e = load_table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
-        .orderBy("window_start", "event_type")
-    )
+    return tumbling_agg(e).orderBy("window_start", "event_type")
 
 
 @query(
@@ -109,20 +104,18 @@ ORDER BY user_id, session_start
     tags=("stream",),
 )
 def q_window_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based session windows (30 min inactivity). Spark session_window
-    ends at last_event + gap, so last_event_ts = end - 30 min. The oracle
-    derives the same sessions with the lag-gap-cumsum idiom."""
+    """Gap-based session windows (30 min inactivity): the streaming
+    :func:`session_agg`. A session ends at last_event + gap, so
+    last_event_ts = session_end - gap. The oracle derives the same
+    sessions with the lag-gap-cumsum idiom."""
+    gap = "30 minutes"
     e = load_table(spark, sf_dir, "events")
     return (
-        e.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
-        )
+        session_agg(e, gap=gap)
         .select(
             "user_id",
-            F.col("w.start").alias("session_start"),
-            (F.col("w.end") - F.expr("INTERVAL 30 MINUTES")).alias("last_event_ts"),
+            "session_start",
+            (F.col("session_end") - F.expr(f"INTERVAL {gap}")).alias("last_event_ts"),
             "n_events",
             "sum_value",
         )
@@ -140,8 +133,12 @@ FROM events
 )
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup keyed on event_id over a doubled input (union of the
-    stream with itself). Streaming form: withWatermark + dropDuplicates —
-    same call, bounded state; engine-tested in tests/test_streaming.py."""
+    stream with itself). Not the streaming operator: streaming_dedup
+    (streaming/windows.py) bounds its state with withWatermark +
+    dropDuplicatesWithinWatermark, which Spark rejects on a batch frame
+    ("not supported with batch DataFrames"), so this twin runs a plain
+    dropDuplicates; the streaming form is engine-tested in
+    tests/test_streaming.py."""
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     doubled = e.unionByName(e)
     return doubled.dropDuplicates(["event_id"])
@@ -161,13 +158,11 @@ JOIN (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') c
     tags=("stream", "join"),
 )
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Click-attribution interval join, batch-equivalent form: each
-    purchase matched to every click by the same user in the preceding 30
-    minutes. The IDENTICAL join condition runs on two readStream sources
-    in streaming/windows.py::stream_stream_interval_join (where the time
-    bound is what lets Structured Streaming evict join state past
-    watermark + interval — engine-tested in tests/test_streaming.py);
-    this batch twin is the value-verifiable face the driver can hash.
+    """Click-attribution interval join: the streaming
+    :func:`stream_stream_interval_join` over two filtered batch frames —
+    each purchase matched to every click by the same user in the
+    preceding 30 minutes. On streams the time bound is what lets
+    Structured Streaming evict join state past watermark + interval.
 
     Shape: equi-join on user_id with the time bound as a residual — the
     corpus shuffles once per side on the join key; no theta join."""
@@ -178,21 +173,13 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"), "user_id", F.col("ts").alias("cts")
     )
-    return (
-        p.join(
-            c,
-            ["user_id"],
-        )
-        .filter(
-            (F.col("cts") <= F.col("pts"))
-            & (F.col("cts") >= F.col("pts") - F.expr("INTERVAL 30 MINUTES"))
-        )
-        .select(
-            "buy_id",
-            "click_id",
-            (
-                F.expr("unix_micros(pts) div 1000")
-                - F.expr("unix_micros(cts) div 1000")
-            ).alias("gap_ms"),
-        )
+    return stream_stream_interval_join(
+        p, c, on="user_id", left_ts="pts", right_ts="cts"
+    ).select(
+        "buy_id",
+        "click_id",
+        (
+            F.expr("unix_micros(pts) div 1000")
+            - F.expr("unix_micros(cts) div 1000")
+        ).alias("gap_ms"),
     )

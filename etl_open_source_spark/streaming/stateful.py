@@ -43,8 +43,9 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     micro-batch commit when a timeout conf is set (reproduced in isolation;
     NoTimeout completes in seconds, any timeout conf never finishes). At
     bounded key cardinality (users) NoTimeout state is acceptable; for
-    unbounded keys, evict via the newer transformWithState API or restart
-    compaction until the upstream fix."""
+    unbounded keys, evict by restart compaction until the upstream fix.
+    (Spark 4's transformWithStateInPandas has per-state TTL, but its
+    state channel needs google.protobuf, which PySpark does not require.)"""
     return (
         events.groupBy("user_id")
         .applyInPandasWithState(
@@ -56,81 +57,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         )
     )
 
-
-# --------------------------------------------------------------- Spark 4 API
-
-TWS_OUTPUT_SCHEMA = "user_id bigint, cnt bigint, total double"
-
-#: transformWithState's driver<->JVM state channel is protobuf-framed
-#: (StreamingPythonRunner); without google.protobuf the state-server
-#: worker crashes at init with an opaque STREAM_FAILED. Probe up front
-#: and fail with the real reason instead.
-def _protobuf_available() -> bool:
-    import importlib.util
-
-    try:
-        # find_spec imports the parent package; a missing 'google'
-        # namespace raises instead of returning None
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-def transform_with_state_totals(events: DataFrame, ttl_minutes: int | None = None):
-    """Per-user running (count, sum(value)) via the Spark 4
-    ``transformWithStateInPandas`` API — the successor to
-    :func:`running_user_totals`'s applyInPandasWithState, with typed state
-    variables and built-in per-state TTL (the eviction story the older
-    API's timeout path cannot deliver on this PySpark build — see the
-    note in :func:`running_user_totals`).
-
-    ENVIRONMENT-LIMITED in this container: the API's state server speaks
-    protobuf between the Python driver worker and the JVM
-    (pyspark.sql.streaming.stateful_processor_api_client imports
-    google.protobuf), and no protobuf wheel is installed here (installs
-    barred). The guard below raises a documented RuntimeError; on any
-    standard cluster image (protobuf ships with every connect-enabled
-    distro) the operator runs as-is — tests/test_streaming.py runs the
-    real engine path automatically when protobuf is importable.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``); TTL needs
-    ``timeMode="ProcessingTime"``.
-    """
-    if not _protobuf_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf for its "
-            "state-server channel; not installed in this container "
-            "(see streaming/stateful.py docstring). Use "
-            "running_user_totals (applyInPandasWithState) instead."
-        )
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle):  # StatefulProcessorHandle
-            if ttl_minutes is None:
-                self._state = handle.getValueState("totals", STATE_SCHEMA)
-            else:
-                self._state = handle.getValueState(
-                    "totals", STATE_SCHEMA, ttlDurationMs=ttl_minutes * 60_000
-                )
-
-        def handleInputRows(self, key, rows, timer_values):
-            cnt, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                cnt += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((cnt, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "cnt": [cnt], "total": [total]}
-            )
-
-        def close(self):
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None" if ttl_minutes is None else "ProcessingTime",
-    )

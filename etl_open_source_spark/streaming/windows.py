@@ -1,5 +1,8 @@
-"""Streaming transformations — the same declarative expressions as the
-batch queries (queries/stream_windows.py), applied to unbounded inputs.
+"""Streaming transformations — the one definition of each. The batch
+twins in queries/stream_windows.py (and q_mv_incremental) call these same
+functions on a batch frame, where Catalyst drops the watermark, so the
+DuckDB oracle checks the expressions the stream runs. Streaming dedup is
+the exception: dropDuplicatesWithinWatermark refuses batch frames.
 
 Design for scale: every stateful op here carries a watermark so state is
 bounded (without one, a windowed agg or dedup accumulates state forever —
@@ -12,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_open_source_spark.sources.writers import write_files
+from etl_open_source_spark.functions.numeric import dec, dsum
+from etl_open_source_spark.sources.writers import write_files, write_jdbc
 
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -20,27 +24,23 @@ EVENTS_SCHEMA = (
 )
 
 
-def file_event_stream(
-    spark: SparkSession,
-    path: str,
-    schema: str = EVENTS_SCHEMA,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def file_event_stream(spark: SparkSession, path: str, schema: str = EVENTS_SCHEMA) -> DataFrame:
     """JSON-lines file source — each new file becomes (part of) a
     micro-batch; the unit-testable stand-in for Kafka/Kinesis."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
+    return spark.readStream.schema(schema).json(path)
 
 
 def tumbling_agg(df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Tumbling 1 h windows with a watermark: late events beyond the
-    watermark are dropped; closed windows' state is evicted."""
+    watermark are dropped; closed windows' state is evicted. Epoch-aligned,
+    so windows agree with DuckDB's time_bucket (q_window_tumbling)."""
     return (
         df.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            dsum("value").alias("sum_value"),
+        )
         .select(
             F.col("w.start").alias("window_start"),
             F.col("w.end").alias("window_end"),
@@ -53,16 +53,20 @@ def tumbling_agg(df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
 
 def session_agg(df: DataFrame, gap: str = "30 minutes", watermark: str = "10 minutes") -> DataFrame:
     """Session windows (gap-based) per user — merging-window state, bounded
-    by the watermark."""
+    by the watermark. A session ends at its last event + ``gap``."""
     return (
         df.withWatermark("ts", watermark)
         .groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value").alias("sum_value"),
+        )
         .select(
             "user_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
+            "sum_value",
         )
     )
 
@@ -79,25 +83,6 @@ def streaming_dedup(df: DataFrame, keys: list[str], watermark: str = "10 minutes
     is inert and state grows forever (the exact unbounded-state OOM this
     module exists to prevent)."""
     return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def stream_static_enrich(
-    stream: DataFrame, dim: DataFrame, on: str, how: str = "left",
-    hint_broadcast: bool = True,
-) -> DataFrame:
-    """Stream-static dimension enrichment: join a streaming fact to a
-    batch dimension table. Spark re-plans the static side per micro-batch
-    (so dim refreshes are picked up); the stream itself never shuffles
-    for the join. The standard production pattern for attaching
-    user/account/catalog attributes to events.
-
-    ``hint_broadcast`` FORCES the broadcast (right for dimension-sized
-    tables, the common case). It is a mandatory hint that overrides
-    autoBroadcastJoinThreshold — for a dimension too big to ship to every
-    executor, pass False and let the planner choose per micro-batch."""
-    from pyspark.sql.functions import broadcast
-
-    return stream.join(broadcast(dim) if hint_broadcast else dim, on, how)
 
 
 def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
@@ -205,9 +190,6 @@ def foreach_batch_jdbc_sink(
     staging table for exactly-once; plain append is at-least-once.
 
     Returns the StreamingQuery (caller awaits/stops it)."""
-    from pyspark.sql import functions as F
-
-    from etl_open_source_spark.sources.writers import write_jdbc
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
         write_jdbc(
@@ -226,6 +208,27 @@ def foreach_batch_jdbc_sink(
     )
 
 
+def rollup_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
+    """Per-key partial-aggregate state of an incremental rollup: (keys,
+    n = row count, sum_dec = exact DECIMAL(18,4) sum of ``value_col``).
+    Both columns re-aggregate (counts add, decimal sums add), so two
+    states merge with :func:`merge_rollup_states`; averages and the like
+    derive from the merged state at read time."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dec(value_col)).alias("sum_dec"),
+    )
+
+
+def merge_rollup_states(a: DataFrame, b: DataFrame, keys: list[str]) -> DataFrame:
+    """Merge two :func:`rollup_state` frames into one state."""
+    return (
+        a.unionByName(b)
+        .groupBy(*keys)
+        .agg(F.sum("n").alias("n"), F.sum("sum_dec").alias("sum_dec"))
+    )
+
+
 def foreach_batch_incremental_mv(
     stream: DataFrame,
     target_path: str,
@@ -234,15 +237,13 @@ def foreach_batch_incremental_mv(
     checkpoint: str,
 ):
     """Streaming incremental materialized view — the streaming twin of
-    q_mv_incremental (queries/maintenance_q.py): every micro-batch
-    reduces to per-key partial-aggregate state (row count + exact
-    DECIMAL(18,4) sum of ``value_col``) and folds it into a standing
-    parquet rollup, so the view absorbs each batch by touching only
-    batch-sized state — history is never re-scanned.
+    q_mv_incremental (queries/maintenance_q.py), on the same state
+    helpers: every micro-batch reduces to a :func:`rollup_state` and
+    folds into a standing parquet rollup by :func:`merge_rollup_states`,
+    so the view absorbs each batch by touching only batch-sized state —
+    history is never re-scanned.
 
-    The state columns are re-aggregatable (counts add, decimal sums
-    add), which is the whole trick; averages and the like derive at read
-    time. Unlike the upsert sink above, the additive merge is NOT
+    Unlike the upsert sink above, the additive merge is NOT
     idempotent under batch replay — with plain parquet the guarantee is
     the checkpoint's at-least-once, so a crash exactly between the
     snapshot write and the epoch commit can double-fold one batch; a
@@ -251,14 +252,10 @@ def foreach_batch_incremental_mv(
     either way.
 
     Returns the StreamingQuery (caller awaits/stops it)."""
-    from pyspark.sql import functions as F
 
     def fold(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        partial = batch.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col(value_col).cast("decimal(18,4)")).alias("sum_dec"),
-        )
+        partial = rollup_state(batch, keys, value_col)
         # Existence-checked, NOT try/except: treating ANY read error as
         # "first batch" would replace the accumulated view with one
         # batch's state and keep streaming green — total silent data
@@ -267,14 +264,7 @@ def foreach_batch_incremental_mv(
             spark.read.parquet(target_path) if _hadoop_path_exists(spark, target_path) else None
         )
         if standing is not None:
-            partial = (
-                standing.unionByName(partial)
-                .groupBy(*keys)
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("sum_dec").alias("sum_dec"),
-                )
-            )
+            partial = merge_rollup_states(standing, partial, keys)
         # materialize before overwriting the path being read
         write_files(partial.localCheckpoint(eager=True), target_path, "parquet", "replace")
 

@@ -84,3 +84,34 @@ def test_mongo_extract_reaches_spark_mongodb_source(spark):
 
     load = _spec(mongo, {}, {"path": "/tmp/out"}, "m")
     assert any("does not support loading" in i for i in validate_spec(load))
+
+
+@pytest.mark.parametrize(
+    "conn_type, params, load",
+    [
+        ("json", {}, {"path": "/tmp/out", "partition_by": ["k"]}),
+        ("csv", {}, {"path": "/tmp/out", "partition_by": ["k"]}),
+        ("postgres", PG, {"table": "t", "partition_by": ["k"]}),
+    ],
+)
+def test_partition_by_rejected_where_the_format_takes_none(conn_type, params, load):
+    """A load whose format writes no partition layout must not accept
+    partition_by: validate reports it, where it used to pass and the
+    load wrote flat files (or a flat table)."""
+    conn = ConnectionConfig(id="c", name="c", type=conn_type, params=params)
+    issues = validate_spec(_spec(conn, {"query": "SELECT 1"}, load, "c"))
+    assert any("'partition_by'" in i and conn_type in i for i in issues), issues
+
+
+def test_json_load_with_partition_by_raises_at_run(spark, tmp_path):
+    """The runner hands partition_by to the file writer, which refuses it
+    for json, instead of dropping it and writing unpartitioned files."""
+    src = str(tmp_path / "in")
+    spark.createDataFrame([(1, "a")], "id int, k string").write.parquet(src)
+    pq = ConnectionConfig(id="pq", name="pq", type="parquet")
+    js = ConnectionConfig(id="js", name="js", type="json")
+    out = str(tmp_path / "out")
+    spec = _spec(pq, {"path": src}, {"path": out, "partition_by": ["k"]}, "js")
+    spec.connections.append(js)
+    with pytest.raises(ValueError, match="json files take no partition_by"):
+        PipelineRunner(spark).run(spec)

@@ -356,11 +356,11 @@ def test_lsh_bucket_cap_bounds_candidates_and_keeps_recall(spark_prop):
         lsh_candidate_pairs,
         minhash_lsh_pairs,
         minhash_signatures,
-        word_shingles,
+        shingle_positions,
     )
 
     df = _skew_corpus(spark_prop)
-    sig = minhash_signatures(word_shingles(df, "doc_id", "text", 3)).persist()
+    sig = minhash_signatures(shingle_positions(df, "doc_id", "text", 3)).persist()
     uncapped = lsh_candidate_pairs(sig, max_bucket_size=None).count()
     capped = lsh_candidate_pairs(sig, max_bucket_size=50).count()
     sig.unpersist()

@@ -44,6 +44,18 @@ def test_uniform_sample_is_subset_monotone(spark, sf_dir):
     assert a == b
 
 
+def test_uniform_sample_keeps_the_boundary_bucket(spark):
+    """fraction 0.57 keeps buckets [0, 5700): 0.57 * 10_000 is
+    5699.999999999999 in binary, so a truncating threshold dropped bucket
+    5699. The key is found with a Python mirror of det_hash."""
+    from etl_open_source_spark.operators.sampling import _A, _B, _P
+
+    key = next(k for k in range(1_000_000) if ((k % _P) * _A + _B) % _P % 10_000 == 5699)
+    df = spark.createDataFrame([(key,)], "k bigint")
+    assert df.select(F.pmod(det_hash("k"), F.lit(10_000))).first()[0] == 5699
+    assert sample_uniform(df, ["k"], 0.57).count() == 1
+
+
 def test_stratified_exact_quota(spark, sf_dir):
     o = load_table(spark, sf_dir, "orders")
     got = (

@@ -63,26 +63,35 @@ def stream_env(spark):
     shutil.rmtree(root, ignore_errors=True)
 
 
-def test_streaming_tumbling_matches_batch(spark, stream_env):
+def test_streaming_tumbling_matches_batch(spark, stream_env, tmp_path):
+    """The stream and its batch twin run one expression: events streamed
+    through tumbling_agg give the rows q_window_tumbling computes over the
+    same file read as a batch, decimal-exact sums included (a double sum
+    reads 0.1 + 0.2 as 0.30000000000000004)."""
+    from etl_open_source_spark.queries.stream_windows import q_window_tumbling
+    from etl_open_source_spark.streaming.windows import EVENTS_SCHEMA
+
     src, start, _ = stream_env
     rows = [
-        _ev(1, "2024-01-01 00:05:00", etype="view"),
-        _ev(2, "2024-01-01 00:45:00", etype="view"),
-        _ev(3, "2024-01-01 01:05:00", etype="click", value=2.0),
+        _ev(1, "2024-01-01 00:05:00", etype="view", value=0.1),
+        _ev(2, "2024-01-01 00:45:00", etype="view", value=0.2),
+        _ev(3, "2024-01-01 01:05:00", etype="click", value=0.2),
     ]
     _write_events(src, rows, "a.json")
     q = start(tumbling_agg(file_event_stream(spark, src)), "append", "tumbling_out")
     q.processAllAvailable()
+    # the batch twin's events table: the same file, read as a batch
+    spark.read.schema(EVENTS_SCHEMA).json(src).write.parquet(str(tmp_path / "events.parquet"))
     # append mode emits only watermark-closed windows; advance event time far
     _write_events(src, [_ev(4, "2024-01-01 05:00:00")], "b.json")
     q.processAllAvailable()
     q.stop()
-    out = {
-        (str(r.window_start), r.event_type): (r.cnt, r.sum_value)
-        for r in spark.sql("SELECT * FROM tumbling_out").collect()
-    }
-    assert out[("2024-01-01 00:00:00", "view")] == (2, 2.0)
-    assert out[("2024-01-01 01:00:00", "click")] == (1, 2.0)
+    streamed = spark.sql("SELECT * FROM tumbling_out").orderBy("window_start", "event_type")
+    batch = q_window_tumbling(spark, str(tmp_path)).collect()
+    assert streamed.collect() == batch
+    assert [(r.event_type, r.cnt, r.sum_value) for r in batch] == [
+        ("view", 2, 0.3), ("click", 1, 0.2)
+    ]
 
 
 def test_streaming_late_data_dropped(spark, stream_env):
@@ -176,39 +185,6 @@ def test_stateful_running_user_totals(spark, stream_env):
         finals[r.user_id] = (r.cnt, r.total)
     assert finals[1] == (3, 17.0)
     assert finals[2] == (1, 1.0)
-
-
-def test_stream_static_enrichment(spark, stream_env):
-    """Streaming facts joined to a static dimension: attributes attach
-    per micro-batch, unmatched keys survive with NULLs (left join), and
-    late-arriving files still enrich."""
-    from etl_open_source_spark.streaming.windows import (
-        file_event_stream,
-        stream_static_enrich,
-    )
-
-    src, start, spark = stream_env
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "user_id bigint, tier string"
-    )
-    stream = file_event_stream(spark, src)
-    enriched = stream_static_enrich(
-        stream.select("event_id", "user_id", "value"), dim, on="user_id"
-    )
-    q = start(enriched, "append", "enriched")
-    _write_events(
-        src,
-        [
-            _ev(1, "2024-01-01 10:00:00", user=1),
-            _ev(2, "2024-01-01 10:01:00", user=9),  # no dim row
-        ],
-        "a.json",
-    )
-    q.processAllAvailable()
-    _write_events(src, [_ev(3, "2024-01-01 10:02:00", user=2)], "b.json")
-    q.processAllAvailable()
-    got = {r.event_id: r.tier for r in spark.sql("SELECT * FROM enriched").collect()}
-    assert got == {1: "gold", 2: None, 3: "silver"}
 
 
 def test_foreach_batch_upsert_sink(spark, stream_env):
@@ -421,59 +397,6 @@ def test_foreach_batch_incremental_mv_restart_from_checkpoint(spark, stream_env)
         "view": (2, Decimal("6.5000")),  # batch A survived the restart, B folded once
         "buy": (1, Decimal("1.2500")),
     }
-
-
-def test_transform_with_state_totals(spark, stream_env):
-    """Spark-4 transformWithStateInPandas running totals. The API's state
-    channel needs google.protobuf; in this container (no protobuf wheel,
-    installs barred) the operator must fail loudly with the documented
-    guard — on a standard image this test runs the real engine path and
-    must match applyInPandasWithState's totals."""
-    from etl_open_source_spark.streaming.stateful import (
-        _protobuf_available,
-        transform_with_state_totals,
-    )
-    from etl_open_source_spark.streaming.windows import file_event_stream
-
-    src, start, _ = stream_env
-    if not _protobuf_available():
-        with pytest.raises(RuntimeError, match="protobuf"):
-            transform_with_state_totals(file_event_stream(spark, src))
-        return
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        _write_events(
-            src,
-            [
-                _ev(1, "2024-01-01 00:00:00", user=1, value=10.0),
-                _ev(2, "2024-01-01 00:01:00", user=1, value=5.0),
-                _ev(3, "2024-01-01 00:02:00", user=2, value=1.0),
-            ],
-            "a.json",
-        )
-        q = start(
-            transform_with_state_totals(file_event_stream(spark, src)),
-            "update",
-            "tws_totals_out",
-        )
-        q.processAllAvailable()
-        _write_events(src, [_ev(4, "2024-01-01 00:03:00", user=1, value=2.0)], "b.json")
-        q.processAllAvailable()
-        q.stop()
-        finals = {}
-        for r in spark.sql("SELECT * FROM tws_totals_out").collect():
-            finals[r.user_id] = (r.cnt, r.total)
-        assert finals[1] == (3, 17.0)
-        assert finals[2] == (1, 1.0)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
 
 def test_streaming_binary_ingest_through_multimodal_stage(spark, tmp_path):
